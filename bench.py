@@ -11,12 +11,14 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import partial
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 import whylogs_spark as wsp
 from whylogs_spark.core import summaries
+from whylogs_spark.core.util import run_concurrently
 from whylogs_spark.ops import dedup as dedup_ops
 from whylogs_spark.ops import similarity as sim_ops
 from whylogs_spark.ops import text as text_ops
@@ -41,11 +43,7 @@ def _par(*thunks) -> None:
     inputs — results and per-query task-seconds are unchanged; only
     idle-core wall time is recovered. Sequentially-dependent work
     (fit -> score, write -> read) stays inside a single thunk."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
-        for f in [pool.submit(th) for th in thunks]:
-            f.result()
+    run_concurrently(SparkSession.active(), thunks, max_workers=4)
 
 
 def main() -> None:
@@ -873,9 +871,9 @@ def main() -> None:
                                 _dt.datetime(2024, 8, 1 + day,
                                              tzinfo=_dt.timezone.utc))
 
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_one_day, range(10)))
+            run_concurrently(
+                spark, [partial(_one_day, d) for d in range(10)],
+                max_workers=3)
             _par(
                 lambda: _noop(store.quantile_series(
                     spark, "bench", "l_quantity",

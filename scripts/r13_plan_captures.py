@@ -57,8 +57,8 @@ def main(outdir: str, suffix: str) -> None:
     ok = ok & xc.isNotNull() & ~F.isnan(xc)
     base = df.filter(ok).select(y.alias("__y"), xc.alias("__x0"))
     try:
-        from whylogs_spark.core.util import iteration_base
-        base = iteration_base(base)
+        from whylogs_spark.core.util import checkpoint
+        base = checkpoint(base, eager=False)
     except ImportError:
         pass  # pre-r13 tree: loop aggregates hit the raw plan
     eta = F.lit(0.0) + F.lit(0.0) * F.col("__x0")
@@ -91,8 +91,8 @@ def main(outdir: str, suffix: str) -> None:
         .select("l_quantity", "l_extendedprice")
     sl = li.offset(60000).limit(60000)
     try:
-        from whylogs_spark.core.profiler import _cut_derived_lineage
-        sl = _cut_derived_lineage(sl)
+        from whylogs_spark.core.util import checkpoint
+        sl = checkpoint(sl, derived=True)
     except ImportError:
         pass  # pre-r13 tree: the sketch pass re-executes the funnel
     _, sketches = plan_dataframe(sl.schema, None, [], DEFAULT_CONFIG)

@@ -1,18 +1,26 @@
-"""r13 plan-shaping helpers: adaptive ensure_parallelism width,
-conditional lineage cut for derived profile inputs, and the
-iteration_base right-sizing used by every IRLS-style fit."""
+"""Plan shaping in ``core.util``: adaptive ensure_parallelism width,
+the ``checkpoint`` lineage-cut policy (derived profile inputs,
+IRLS-style iteration bases), and ``run_concurrently``'s job-tag
+inheritance and failure reporting."""
+
+import re
+import time
+from pathlib import Path
 
 import pyspark.sql.functions as F
 import pytest
 
+from whylogs_spark.core import util
 from whylogs_spark.core.util import (
     MIN_ADAPTIVE_SLICES,
     _has_expensive_node,
-    cut_derived_lineage,
+    checkpoint,
     ensure_parallelism,
-    iteration_base,
     plan_size_estimate,
+    run_concurrently,
 )
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def test_plan_size_estimate_scan_vs_unknown(spark, lineitem):
@@ -47,11 +55,11 @@ def test_expensive_node_skips_cache_build_plan(spark, lineitem):
 
 
 def test_cut_derived_lineage_noop_on_scan(spark, lineitem):
-    out = cut_derived_lineage(lineitem)
+    out = checkpoint(lineitem, derived=True)
     assert out is lineitem
 
 
-def test_cut_derived_lineage_skips_unbounded(spark, lineitem):
+def test_cut_derived_lineage_skips_unbounded(spark, lineitem, monkeypatch):
     # a row-EXPANDING derived plan (10x crossJoin replication) has an
     # expensive node but an unbounded estimate: materializing it costs
     # more than the column-pruned re-scans it would save — must NOT cut
@@ -60,27 +68,23 @@ def test_cut_derived_lineage_skips_unbounded(spark, lineitem):
         spark.range(10).select(F.col("id").alias("__rep"))).drop("__rep")
     est = plan_size_estimate(li10)
     if est is not None and est > 256 * 1024 * 1024:
-        assert cut_derived_lineage(li10) is li10
-    # and the cap is conf-overridable: shrink it so even a small
+        assert checkpoint(li10, derived=True) is li10
+    # and the cap is the module constant: shrink it so even a small
     # derived frame is refused
     small = lineitem.select("l_orderkey").offset(10).limit(10)
-    spark.conf.set("spark.whylogs.checkpointMaxBytes", "0")
-    try:
-        assert cut_derived_lineage(small) is small
-    finally:
-        spark.conf.unset("spark.whylogs.checkpointMaxBytes")
-    assert cut_derived_lineage(small) is not small
+    with monkeypatch.context() as m:
+        m.setattr(util, "CHECKPOINT_MAX_BYTES", 0)
+        assert checkpoint(small, derived=True) is small
+    assert checkpoint(small, derived=True) is not small
     # caller-asserted bounded inputs bypass the gate
-    spark.conf.set("spark.whylogs.checkpointMaxBytes", "0")
-    try:
-        assert cut_derived_lineage(small, bounded=True) is not small
-    finally:
-        spark.conf.unset("spark.whylogs.checkpointMaxBytes")
+    with monkeypatch.context() as m:
+        m.setattr(util, "CHECKPOINT_MAX_BYTES", 0)
+        assert checkpoint(small, derived=True, bounded=True) is not small
 
 
 def test_cut_derived_lineage_values_identical(spark, lineitem):
     sl = lineitem.select("l_orderkey", "l_quantity").offset(100).limit(50)
-    cut = cut_derived_lineage(sl)
+    cut = checkpoint(sl, derived=True)
     assert cut is not sl
     a = sorted(r["l_orderkey"] for r in sl.collect())
     b = sorted(r["l_orderkey"] for r in cut.collect())
@@ -117,7 +121,7 @@ def test_iteration_base_right_sizes_and_cuts(spark, orders):
         (F.col("o_totalprice") / 1000.0).alias("__y"),
         (F.col("o_custkey") % 10).cast("double").alias("__x0"),
     ).repartition(4)
-    ck = iteration_base(base)
+    ck = checkpoint(base, eager=False)
     # a few hundred KB of doubles must coalesce below the input width
     assert ck.rdd.getNumPartitions() <= 4
     # lineage is cut: the checkpointed plan has no shuffle left
@@ -147,3 +151,111 @@ def test_irls_fits_unchanged_by_base_cut(spark, orders):
     p1 = fit_poisson(df, "yc", ["x"])
     assert p1["n"] == m1["n"]
     assert p1["converged"]
+
+
+def _jobs_newest_first(spark):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None)
+
+
+def _jobs_since(spark, first_id):
+    """{job id: job tags} of every job with id >= ``first_id``."""
+    jobs = _jobs_newest_first(spark)
+    out = {}
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() < first_id:
+            break
+        tags = job.jobTags()
+        out[job.jobId()] = [tags.apply(k) for k in range(tags.size())]
+    return out
+
+
+@pytest.mark.parametrize(
+    "path", ["unsegmented", "segmented", "wide", "two_model_uplift"])
+def test_threaded_jobs_carry_caller_tag(spark, lineitem, path):
+    """Jobs launched from the profiler's, core/wide's and the uplift
+    fit's driver threads carry the caller's job tag, so they can be
+    attributed to (and cancelled with) the caller."""
+    from whylogs_spark.core.configs import MetricConfig
+    from whylogs_spark.core.profiler import profile
+    from whylogs_spark.ops.uplift import two_model_uplift
+
+    df = lineitem.select("l_quantity", "l_discount", "l_returnflag",
+                         "l_linestatus")
+    run = {
+        "unsegmented": lambda: profile(df),
+        "segmented": lambda: profile(df, segment_by=["l_returnflag"]),
+        "wide": lambda: profile(
+            df, config=MetricConfig(wide_column_threshold=1)),
+        "two_model_uplift": lambda: two_model_uplift(
+            lineitem.select(
+                (F.col("l_orderkey") % 2).alias("t"),
+                (F.col("l_returnflag") == "R").cast("double").alias("y"),
+                (F.col("l_quantity") / 50.0).alias("x")),
+            "t", "y", ["x"], max_iter=3),
+    }[path]
+    tag = f"wsp-test-{path}"
+    newest = _jobs_newest_first(spark)
+    first = newest.apply(0).jobId() + 1 if newest.size() else 0
+    spark.addTag(tag)
+    try:
+        run()
+    finally:
+        spark.removeTag(tag)
+    jobs = _jobs_since(spark, first)
+    assert len(jobs) >= 2
+    untagged = [j for j, tags in jobs.items()
+                if not any(t.endswith(f"-{tag}") for t in tags)]
+    assert untagged == []
+
+
+def test_run_concurrently_surfaces_every_failure(spark):
+    def fail(exc):
+        def thunk():
+            raise exc
+        return thunk
+
+    done = []
+
+    def slow():
+        time.sleep(0.3)
+        done.append(1)
+        return 1
+
+    # several failures: one group holding all of them, raised only
+    # after every thunk has finished
+    with pytest.raises(ExceptionGroup) as ei:
+        run_concurrently(
+            spark, [fail(ValueError("a")), slow, fail(KeyError("b"))])
+    assert [type(e) for e in ei.value.exceptions] == [ValueError, KeyError]
+    assert done == [1]
+    # a single failure re-raises the thunk's own exception
+    with pytest.raises(ValueError, match="only one"):
+        run_concurrently(spark, [slow, fail(ValueError("only one"))])
+    assert done == [1, 1]
+    assert run_concurrently(
+        spark, [lambda: 1, lambda: 2, lambda: 3], max_workers=2) == [1, 2, 3]
+    assert run_concurrently(spark, []) == []
+
+
+def test_plan_shaping_lives_in_util_only():
+    """Lineage cuts, task width, thread pools and ``spark.whylogs.*``
+    confs are decided in core/util.py only; the helpers it replaced
+    are gone everywhere."""
+    lib = ROOT / "whylogs_spark"
+    removed = re.compile(r"\b_?(cut_lineage|cut_derived_lineage|"
+                         r"iteration_base|rightsize_width)\b")
+    files = [*lib.rglob("*.py"), *(ROOT / "scripts").rglob("*.py"),
+             *(ROOT / "tests").rglob("*.py"), ROOT / "bench.py"]
+    for path in files:
+        if path in (lib / "core" / "util.py", Path(__file__).resolve()):
+            continue
+        text = path.read_text()
+        rel = path.relative_to(ROOT)
+        if path.is_relative_to(lib) or path.name == "bench.py":
+            assert "ThreadPoolExecutor(" not in text, rel
+        if path.is_relative_to(lib):
+            assert "spark.whylogs." not in text, rel
+        assert not removed.search(text), (rel, removed.search(text)[0])

@@ -352,9 +352,12 @@ def test_chained_walks_plan_stays_linear(spark):
 
 
 def test_cut_lineage_kill_switch(spark):
-    """spark.whylogs.cutLineage=false disables the walk-entry
-    checkpoint (the plan audit uses it to expose scan pushdown in the
-    end-to-end plan); results are identical either way."""
+    """spark.whylogs.cutLineage=false disables every checkpoint cut —
+    the walk entry, derived inputs and iteration bases (the plan audit
+    uses it to expose scan pushdown in the end-to-end plan); results
+    are identical either way."""
+    from whylogs_spark.core.util import checkpoint
+
     rng = random.Random(31)
     rows = [(float(k), rng.randint(0, 9))
             for k in rng.sample(range(10_000), 200)]
@@ -369,10 +372,17 @@ def test_cut_lineage_kill_switch(spark):
 
     cut = running_sums(df, ["k"], ["a"])
     assert "localCheckpoint" in fmt(cut)
+    # a derived frame Catalyst can bound (the list-backed df has no
+    # size estimate, so only the walk and iteration cuts take it)
+    derived = spark.range(1000).groupBy(F.col("id") % 7).count()
+    assert checkpoint(derived, derived=True) is not derived
+    assert checkpoint(df, eager=False) is not df
     spark.conf.set("spark.whylogs.cutLineage", "false")
     try:
         uncut = running_sums(df, ["k"], ["a"])
         assert "localCheckpoint" not in fmt(uncut)
+        assert checkpoint(derived, derived=True) is derived
+        assert checkpoint(df, eager=False) is df
     finally:
         spark.conf.unset("spark.whylogs.cutLineage")
     key = lambda r: r.k  # noqa: E731

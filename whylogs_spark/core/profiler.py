@@ -40,6 +40,7 @@ table — see ``merge_profiles``.
 from __future__ import annotations
 
 import json
+from functools import partial
 from typing import Dict, Iterable, Iterator, List, Optional
 
 import pandas as pd
@@ -55,7 +56,7 @@ from .planner import (
     plan_dataframe,
 )
 from .sketches import FrequentStringsSketch, KllSketch
-from .util import cut_derived_lineage as _cut_derived_lineage
+from .util import checkpoint, run_concurrently
 from .util import ensure_parallelism as _ensure_parallelism
 
 PROFILE_SCHEMA = T.StructType(
@@ -151,6 +152,31 @@ def _local_profile_df(spark, rows):
     return spark.createDataFrame(
         sc.parallelize(rows, numSlices=n), PROFILE_SCHEMA)
 
+
+def _by_tier(aggs: List[PlannedAgg]) -> List[tuple]:
+    """``[(tier, aggs of that tier)]`` in tier-name order."""
+    tiers: Dict[str, List[PlannedAgg]] = {}
+    for a in aggs:
+        tiers.setdefault(a.tier, []).append(a)
+    return sorted(tiers.items())
+
+
+_COERCE = {SLOT_N: int, SLOT_D: float, SLOT_S: lambda v: v, SLOT_B: bytes}
+
+
+def _slot_rows(seg: str, tier_aggs: List[PlannedAgg], values: dict):
+    """Long-form profile rows of one collected agg row: each emitted
+    agg's value, coerced into its typed n/d/s/b slot."""
+    for a in tier_aggs:
+        if not a.emit:
+            continue
+        v = a.const if a.const is not None else values.get(a.alias)
+        slots = dict.fromkeys((SLOT_N, SLOT_D, SLOT_S, SLOT_B))
+        if v is not None:
+            slots[a.slot] = _COERCE[a.slot](v)
+        yield (seg, a.column, a.metric, a.component, *slots.values())
+
+
 def _native_long_one_tier(
     df: DataFrame, aggs: List[PlannedAgg], segment_cols: List[str]
 ) -> DataFrame:
@@ -184,12 +210,9 @@ def _native_long(
     expressions in whole-stage codegen; the extra column-pruned parquet
     scan is far cheaper than losing codegen on everything.
     """
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
     parts = [
         _native_long_one_tier(df, tier_aggs, segment_cols)
-        for _, tier_aggs in sorted(tiers.items())
+        for _, tier_aggs in _by_tier(aggs)
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -210,15 +233,9 @@ def _segmented_native_long(
     the 1000+-expression explode projection. Past the limit, fall back to
     the fully-distributed explode path.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = df.sparkSession
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
 
-    def run_tier(item):
-        tier, tier_aggs = item
+    def run_tier(tier, tier_aggs):
         base = [a for a in tier_aggs if a.expr is not None]
         src = _ensure_parallelism(df) if tier == "object" else df
         wide = src.groupBy(*segment_cols).agg(
@@ -231,8 +248,8 @@ def _segmented_native_long(
         rows = wide.select(*sel).limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
         return tier_aggs, rows
 
-    with ThreadPoolExecutor(max_workers=max(len(tiers), 1)) as pool:
-        results = list(pool.map(run_tier, sorted(tiers.items())))
+    results = run_concurrently(
+        spark, [partial(run_tier, *item) for item in _by_tier(aggs)])
 
     if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, rows in results):
         return _native_long(df, aggs, segment_cols)  # distributed fallback
@@ -241,24 +258,7 @@ def _segmented_native_long(
     for tier_aggs, rows in results:
         for row in rows:
             rd = row.asDict()
-            seg = rd["__segment"]
-            for a in tier_aggs:
-                if not a.emit:
-                    continue
-                v = a.const if a.const is not None else rd.get(a.alias)
-                slots = {"n": None, "d": None, "s": None, "b": None}
-                if v is not None:
-                    if a.slot == SLOT_N:
-                        v = int(v)
-                    elif a.slot == SLOT_D:
-                        v = float(v)
-                    elif a.slot == SLOT_B:
-                        v = bytes(v)
-                    slots[a.slot] = v
-                out_rows.append((
-                    seg, a.column, a.metric, a.component,
-                    slots["n"], slots["d"], slots["s"], slots["b"],
-                ))
+            out_rows.extend(_slot_rows(rd["__segment"], tier_aggs, rd))
     return _local_profile_df(spark, out_rows)
 
 
@@ -273,12 +273,7 @@ def _native_long_collected(
     ONE row; a flat select + driver reshape is plan-size O(#aggs) and the
     collected payload is a few KB of profile components.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = df.sparkSession
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
 
     # Chunk each tier by source column (a derived agg always lives with
     # its derive_from base, which the planner emits for the same column).
@@ -287,7 +282,7 @@ def _native_long_collected(
     # over ONE local file — happens in parallel threads. Column pruning
     # keeps each chunk's parquet scan narrow.
     work: List[tuple] = []
-    for tier, tier_aggs in sorted(tiers.items()):
+    for tier, tier_aggs in _by_tier(aggs):
         by_col: Dict[str, List[PlannedAgg]] = {}
         for a in tier_aggs:
             by_col.setdefault(a.column, []).append(a)
@@ -302,8 +297,7 @@ def _native_long_collected(
             chunk = [a for c in cols[i:i + chunk_cols] for a in by_col[c]]
             work.append((tier, chunk))
 
-    def run_chunk(item):
-        tier, tier_aggs = item
+    def run_chunk(tier, tier_aggs):
         base = [a for a in tier_aggs if a.expr is not None]
         src = _ensure_parallelism(df) if tier == "object" else df
         wide = src.agg(*[a.expr.alias(a.alias) for a in base])
@@ -313,26 +307,11 @@ def _native_long_collected(
         ]
         return tier_aggs, wide.select(*sel).collect()[0].asDict()
 
+    results = run_concurrently(
+        spark, [partial(run_chunk, *item) for item in work], max_workers=8)
     out_rows: List[tuple] = []
-    with ThreadPoolExecutor(max_workers=max(min(len(work), 8), 1)) as pool:
-        for tier_aggs, row in pool.map(run_chunk, work):
-            for a in tier_aggs:
-                if not a.emit:
-                    continue
-                v = a.const if a.const is not None else row.get(a.alias)
-                slots = {"n": None, "d": None, "s": None, "b": None}
-                if v is not None:
-                    if a.slot == SLOT_N:
-                        v = int(v)
-                    elif a.slot == SLOT_D:
-                        v = float(v)
-                    elif a.slot == SLOT_B:
-                        v = bytes(v)
-                    slots[a.slot] = v
-                out_rows.append((
-                    "{}", a.column, a.metric, a.component,
-                    slots["n"], slots["d"], slots["s"], slots["b"],
-                ))
+    for tier_aggs, row in results:
+        out_rows.extend(_slot_rows("{}", tier_aggs, row))
     return _local_profile_df(spark, out_rows)
 
 
@@ -514,12 +493,8 @@ def profile(
     from .datatypes import flatten_struct_columns
 
     df, columns = flatten_struct_columns(df, columns, segment_cols)
-    # Derived inputs (a join / funnel / python stage upstream): pay the
-    # upstream ONCE instead of once per chunk job + sketch pass (r13,
-    # guide §3.3 "materialising an intermediate truncates the plan").
-    # Plain scans / caches / projections stay un-checkpointed — each
-    # chunk's column-pruned scan is cheaper than materializing.
-    df = _cut_derived_lineage(df)
+    # a derived input is paid once, not once per chunk job + sketch pass
+    df = checkpoint(df, derived=True)
     try:
         df.sparkSession.conf.set("spark.sql.codegen.maxFields", "2048")
         # bigger Arrow batches => fewer python-side groupby/update rounds
@@ -545,56 +520,28 @@ def profile(
 
         sketches = plan_wide_sketches(
             df.schema, columns, segment_cols, config)
-        sketch_df = None
-        fut = None
-        if sketches:
-            from concurrent.futures import ThreadPoolExecutor
 
-            sketch_df = _sketch_long(
-                df, sketches, segment_cols, config).cache()
-            fut = ThreadPoolExecutor(max_workers=1).submit(sketch_df.count)
-        rows = wide_native_rows(df, columns, segment_cols, config)
-        long_df = _local_profile_df(df.sparkSession, rows)
-        if sketch_df is not None:
-            fut.result()
-            long_df = long_df.unionByName(sketch_df)
-        return ProfileView(long_df, config, dataset_timestamp,
+        def native():
+            return _local_profile_df(df.sparkSession, wide_native_rows(
+                df, columns, segment_cols, config))
+    else:
+        aggs, sketches = plan_dataframe(
+            df.schema, columns, segment_cols, config)
+        if segment_cols:
+            native = partial(_segmented_native_long, df, aggs, segment_cols)
+        else:
+            # native tiers are collected eagerly (driver reshape)
+            native = partial(_native_long_collected, df, aggs)
+    if not sketches:
+        return ProfileView(native(), config, dataset_timestamp,
                            metadata=metadata)
-
-    aggs, sketches = plan_dataframe(df.schema, columns, segment_cols, config)
-    if segment_cols:
-        sketch_df = None
-        fut = None
-        if sketches:
-            from concurrent.futures import ThreadPoolExecutor
-
-            sketch_df = _sketch_long(
-                df, sketches, segment_cols, config).cache()
-            pool = ThreadPoolExecutor(max_workers=1)
-            fut = pool.submit(sketch_df.count)
-        long_df = _segmented_native_long(df, aggs, segment_cols)
-        if sketch_df is not None:
-            fut.result()
-            long_df = long_df.unionByName(sketch_df)
-        return ProfileView(long_df, config, dataset_timestamp,
-                           metadata=metadata)
-
-    # Unsegmented: native tiers are collected eagerly (driver reshape);
-    # run the python sketch pass concurrently and cache its (tiny) result.
-    sketch_df = None
-    fut = None
-    if sketches:
-        from concurrent.futures import ThreadPoolExecutor
-
-        sketch_df = _sketch_long(df, sketches, segment_cols, config).cache()
-        pool = ThreadPoolExecutor(max_workers=1)
-        fut = pool.submit(sketch_df.count)
-    long_df = _native_long_collected(df, aggs)
-    if sketch_df is not None:
-        fut.result()
-        long_df = long_df.unionByName(sketch_df)
-    return ProfileView(long_df, config, dataset_timestamp,
-                       metadata=metadata)
+    # the python sketch pass runs concurrently with the native pass;
+    # its (tiny) result is cached so the union replays it
+    sketch_df = _sketch_long(df, sketches, segment_cols, config).cache()
+    _, long_df = run_concurrently(
+        df.sparkSession, [sketch_df.count, native])
+    return ProfileView(long_df.unionByName(sketch_df), config,
+                       dataset_timestamp, metadata=metadata)
 
 
 def profile_partitions(
@@ -615,8 +562,6 @@ def profile_partitions(
 
     Returns {partition_name -> ProfileView}.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from .datatypes import flatten_struct_columns
 
     spark = df.sparkSession
@@ -637,14 +582,10 @@ def profile_partitions(
     sets_exprs = [[F.col(c) for c in cols] for _, cols in part_items]
 
     df, columns = flatten_struct_columns(df, columns, all_cols)
-    df = _cut_derived_lineage(df)
+    df = checkpoint(df, derived=True)
     aggs, sketches = plan_dataframe(df.schema, columns, all_cols, config)
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
 
-    def run_tier(item):
-        tier, tier_aggs = item
+    def run_tier(tier, tier_aggs):
         base = [a for a in tier_aggs if a.expr is not None]
         src = _ensure_parallelism(df) if tier == "object" else df
         gdf = src.groupingSets(sets_exprs, *[F.col(c) for c in all_cols])
@@ -672,32 +613,16 @@ def profile_partitions(
         return tier_aggs, rows
 
     rows_by_part: Dict[str, List[tuple]] = {p: [] for p, _ in part_items}
-    with ThreadPoolExecutor(max_workers=max(len(tiers), 1)) as pool:
-        for tier_aggs, rows in pool.map(run_tier, sorted(tiers.items())):
-            for r in rows:
-                gid = r["__gid"]
-                for pname, cols in part_items:
-                    if gid_for_part[pname] != gid:
-                        continue
-                    seg = _segment_json_py(cols, [r[c] for c in cols])
-                    for a in tier_aggs:
-                        if not a.emit:
-                            continue
-                        v = (a.const if a.const is not None
-                             else r[a.alias])
-                        slots = {"n": None, "d": None, "s": None, "b": None}
-                        if v is not None:
-                            if a.slot == SLOT_N:
-                                v = int(v)
-                            elif a.slot == SLOT_D:
-                                v = float(v)
-                            elif a.slot == SLOT_B:
-                                v = bytes(v)
-                            slots[a.slot] = v
-                        rows_by_part[pname].append((
-                            seg, a.column, a.metric, a.component,
-                            slots["n"], slots["d"], slots["s"], slots["b"],
-                        ))
+    results = run_concurrently(
+        spark, [partial(run_tier, *item) for item in _by_tier(aggs)])
+    for tier_aggs, rows in results:
+        for r in rows:
+            rd = r.asDict()
+            for pname, cols in part_items:
+                if gid_for_part[pname] == rd["__gid"]:
+                    seg = _segment_json_py(cols, [rd[c] for c in cols])
+                    rows_by_part[pname].extend(
+                        _slot_rows(seg, tier_aggs, rd))
 
     out: Dict[str, ProfileView] = {}
     for pname, cols in part_items:

@@ -1,41 +1,92 @@
-"""Shared plan-shaping helpers."""
+"""Plan shaping: lineage cuts, task width and driver-side concurrency.
+
+This module is the only place that makes these decisions; operators
+call :func:`checkpoint`, :func:`ensure_parallelism` and
+:func:`run_concurrently` and never read a ``spark.whylogs.*`` conf or
+build a thread pool themselves.
+
+**Lineage cuts.**  :func:`checkpoint` right-sizes a frame's width and
+then cuts its lineage with ``localCheckpoint``, so that the consumers
+downstream (the two branches of a prefix walk, the chunk jobs and
+sketch pass of the profiler, every step of an IRLS/Newton loop) replay
+materialized blocks instead of re-executing the upstream plan.  A
+chain of prefix walks without the cut doubles the upstream subtree per
+pass: ``cumulative_incidence`` at sf0.1 planned 220 Exchange nodes and
+spent 52 s collecting serialized broadcast rebuilds in one cold run.
+
+* ``localCheckpoint`` and not ``persist``: the cache manager keys
+  entries by canonical plan, so a persisted intermediate would be
+  silently reused by the next identical call in the session (and
+  benchmark reps would measure cache hits).  A local checkpoint is a
+  fresh RDD per call; nothing is shared across calls.  The trade is
+  lineage: an executor lost while the blocks are live fails the job
+  instead of recomputing them.
+* Eager by default: AQE materializes a plan's shuffle and broadcast
+  stages concurrently, and with a lazy checkpoint every concurrent
+  first consumer recomputes or blocks on the same un-materialized
+  blocks (BlockInfoManager write-lock waits).  Flipping eager alone
+  took ``outlier_bins_lineitem`` from 26.1 to 14.6 s wall (284 -> 186
+  stage-seconds) and ``schema_quality_survival`` from 12.2 to 9.7 s on
+  the 32-core bench host.  Iteration bases stay lazy (``eager=False``):
+  their first consumer is a single aggregate, which materializes the
+  blocks without an extra job.
+* ``derived=True`` cuts only inputs that carry re-execution-expensive
+  work (``_EXPENSIVE_NODES`` outside a cache) and that Catalyst bounds
+  by ``CHECKPOINT_MAX_BYTES``.  One materialization pays against N
+  re-executions only when the intermediate is bounded: when the cut
+  fired on a crossJoin-replicated 6M-row frame, ``profile_scale_10x``
+  took 37x the task-seconds (50 -> 1855).  An unknown estimate counts
+  as unbounded.  ``bounded=True`` skips the size check for inputs
+  bounded by contract (the incremental-dedup batch index is strictly
+  smaller than the batch text it summarizes).
+* ``spark.whylogs.cutLineage=false`` turns every cut off for the
+  session.  The plan audit (``scripts/explain_audit.py``) uses it:
+  ``explain()`` below a cut shows only ``Scan ExistingRDD``, so the
+  audit captures the uncut plan to assert scan pushdown end to end.
+
+**Task width.**  One size-to-width rule, :func:`_size_width`: one task
+per ``TASK_TARGET_BYTES`` of Catalyst's size estimate, at least
+``MIN_ADAPTIVE_SLICES``.  A Python-stage task carries ~0.3 s of fixed
+worker cost, so width beyond the data is pure overhead.  A cut only
+ever narrows (shuffle-free ``coalesce``) and keeps at least a quarter
+of the cores: iteration aggregates do real CPU work per byte, and a
+purely size-derived width of 2 slices cost +60% wall on the
+golden-section NLL loop even as task-seconds fell 64%; ``cores/4``
+keeps wall flat and still cuts task launches 4x on 32 slots.
+:func:`ensure_parallelism` only ever widens an under-partitioned
+source, to the same rule capped at the core count.
+
+**Concurrency.**  :func:`run_concurrently` runs independent jobs on
+fresh driver threads wrapped in ``inheritable_thread_target``, so the
+jobs carry the caller's tags, job group and description (a plain pool
+thread sees none of them) and can be attributed or cancelled with the
+caller.  A fresh pool per call keeps tags from leaking between callers
+and lets calls nest without deadlock.
+"""
 
 from __future__ import annotations
 
 import re
-from typing import Optional
+from concurrent.futures import Future, ThreadPoolExecutor
+from typing import Callable, List, Optional, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
-#: In-memory bytes of input one task should own when round-robin
-#: repartitioning an under-partitioned source (override per session
-#: with ``spark.whylogs.taskTargetBytes``).  ~2 MB of rows is a couple
-#: of seconds of Arrow sketch work — small enough to stay parallel,
-#: large enough that the fixed per-task Python-worker cost (~0.3 s
-#: measured on the r13 bench host, OPTIMIZATION_r13.md) stays a
-#: minority share.
+#: In-memory bytes of input one task should own: ~2 MB of rows is a
+#: couple of seconds of Arrow sketch work, enough that the fixed
+#: per-task Python-worker cost stays a minority share.
 TASK_TARGET_BYTES = 2 * 1024 * 1024
 
 #: Floor of the adaptive width: a wrong-small optimizer estimate costs
 #: at most a (true_size / 4)-way serialization, never a single task.
 MIN_ADAPTIVE_SLICES = 4
 
-#: Ceiling on what ``cut_derived_lineage`` will materialize (override
-#: with ``spark.whylogs.checkpointMaxBytes``).  The cut trades ONE
-#: materialization for N re-executions, which only pays when the
-#: intermediate is BOUNDED: a ~256 MB table writes to local block
-#: storage in ~1 s and is dwarfed by the multi-job upstream it saves,
-#: while an unbounded frame (a 10x row-expanding join, a full-width
-#: corpus) costs more to store than the column-pruned re-scans it
-#: replaces — measured 37x task-sec blowup on profile_scale_10x when
-#: the r13 cut fired on a crossJoin-replicated 6M-row frame.  Unknown
-#: estimate => no cut (the conservative pre-r13 behavior).
+#: Largest size estimate a ``derived=True`` cut will materialize.
 CHECKPOINT_MAX_BYTES = 256 * 1024 * 1024
 
 #: Logical-plan node names whose re-execution is expensive (shuffles,
-#: global funnels, python stages) — used to decide whether a profile
-#: input is worth local-checkpointing before fanning out the chunked
-#: aggregate + sketch jobs that each re-execute the input subplan.
+#: global funnels, python stages).
 _EXPENSIVE_NODES = frozenset((
     "Join", "Aggregate", "Window", "Generate", "Expand", "Offset",
     "GlobalLimit", "LocalLimit", "Sort", "Distinct", "Deduplicate",
@@ -88,111 +139,37 @@ def _has_expensive_node(df: DataFrame) -> bool:
     return False
 
 
-def cut_derived_lineage(df: DataFrame, bounded: bool = False) -> DataFrame:
-    """Lazy ``localCheckpoint`` when (and only when) the input plan
-    carries shuffle / global-funnel / python work that every downstream
-    consumer job would otherwise RE-EXECUTE — the profiler fans one
-    input out to several concurrent chunk jobs plus the sketch pass, so
-    an expensive upstream is paid once instead of once per job.  A
-    plain scan / cache / projection / filter input is left alone (each
-    chunk's column-pruned scan is cheaper than materializing the full
-    width).  Same non-reuse contract as ``core.prefix.cut_lineage``:
-    a local checkpoint is a fresh RDD per invocation — nothing is
-    shared across calls, every invocation recomputes from its inputs.
+def _size_width(est_bytes: int) -> int:
+    """Task count for ``est_bytes`` of input (the module's one
+    size-to-width rule)."""
+    return max(MIN_ADAPTIVE_SLICES, -(-est_bytes // TASK_TARGET_BYTES))
 
-    Bounded-intermediate gate (r13): the cut fires only when Catalyst
-    can BOUND the frame (size estimate known and <=
-    ``spark.whylogs.checkpointMaxBytes``, default
-    ``CHECKPOINT_MAX_BYTES``).  A row-expanding join or a full-width
-    corpus plan costs more to materialize than the column-pruned
-    re-scans it would replace; an unknown estimate is treated as
-    unbounded.  ``bounded=True`` bypasses the gate — for call sites
-    whose input is bounded BY CONTRACT (e.g. the incremental-dedup
-    batch index: batch << history, and the index is strictly smaller
-    than the text it summarizes), where the caller knows the
-    materialize-vs-recompute trade better than a generic size cap.
-    """
-    if not _has_expensive_node(df):
-        return df
-    if not bounded:
+
+def checkpoint(df: DataFrame, eager: bool = True, derived: bool = False,
+               bounded: bool = False) -> DataFrame:
+    """Right-size ``df``'s width, then cut its lineage with
+    ``localCheckpoint(eager)``.  With ``derived=True`` the cut fires
+    only on an expensive plan whose size estimate is at most
+    ``CHECKPOINT_MAX_BYTES`` (``bounded=True`` drops the size check).
+    Returns ``df`` unchanged when no cut is made."""
+    try:
+        spark = df.sparkSession
+        if str(spark.conf.get("spark.whylogs.cutLineage",
+                              "true")).lower() == "false":
+            return df
+        if derived and not _has_expensive_node(df):
+            return df
         est = plan_size_estimate(df)
-        if est is None:
+        if derived and not bounded and (
+                est is None or est > CHECKPOINT_MAX_BYTES):
             return df
-        try:
-            cap = int(df.sparkSession.conf.get(
-                "spark.whylogs.checkpointMaxBytes",
-                str(CHECKPOINT_MAX_BYTES)))
-        except Exception:
-            cap = CHECKPOINT_MAX_BYTES
-        if est > cap:
-            return df
-    try:
-        # eager like cut_lineage (r13 measured): the profiler fans its
-        # input out to CONCURRENT chunk jobs; a lazy checkpoint makes
-        # every concurrent first consumer block on (or recompute) the
-        # same un-materialized blocks.  One synchronous job
-        # materializes, all chunk jobs then read.
-        eager = str(df.sparkSession.conf.get(
-            "spark.whylogs.cutLineageEager", "true")).lower() != "false"
-        return rightsize_width(df).localCheckpoint(eager=eager)
-    except Exception:
-        return df
-
-
-def rightsize_width(df: DataFrame) -> DataFrame:
-    """Shuffle-free ``coalesce`` down to ``ceil(size /
-    spark.whylogs.taskTargetBytes)`` slices when the optimizer has a
-    credible size estimate, floored at ``max(MIN_ADAPTIVE_SLICES,
-    cores/4)`` so CPU-bearing consumers keep slots (see
-    ``iteration_base``).  Unknown or large estimates return ``df``
-    unchanged.  Shared by every lineage cut: a small collapsed table
-    otherwise inherits its upstream's partition count (32-128
-    near-empty slices after unions) and pays the fixed per-task cost
-    in the materialization job AND every consumer stage."""
-    est = plan_size_estimate(df)
-    if est is None:
-        return df
-    try:
-        tb = int(df.sparkSession.conf.get(
-            "spark.whylogs.taskTargetBytes", str(TASK_TARGET_BYTES)))
-    except Exception:
-        tb = TASK_TARGET_BYTES
-    target = max(1, -(-est // max(tb, 1)))
-    try:
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        target = max(target, MIN_ADAPTIVE_SLICES, cores // 4)
-        if target < df.rdd.getNumPartitions():
-            return df.coalesce(target)
-    except Exception:
-        pass
-    return df
-
-
-def iteration_base(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Prepare the projected base frame of an iterative fit (IRLS /
-    Newton / golden-section): right-size its width, then cut lineage
-    with a ``localCheckpoint`` so the per-iteration aggregates replay
-    from materialized blocks instead of re-executing the upstream
-    plan.
-
-    Width: an iteration loop runs ``max_iter`` aggregate jobs over the
-    SAME small base — a few MB of projected doubles spread over one
-    partition per core pays ``iters x cores`` task launches of pure
-    overhead.  When the optimizer has a credible size estimate,
-    ``coalesce`` (no shuffle) down to ``ceil(size /
-    spark.whylogs.taskTargetBytes)`` slices first; unknown or large
-    estimates keep the input's width (the pre-r13 behavior).  Same
-    non-reuse contract as every other lineage cut in the repo: a fresh
-    checkpoint per invocation, nothing shared across calls.
-    """
-    # floor at a quarter of the slots (inside rightsize_width):
-    # iteration aggregates do real CPU work (exp/log link functions)
-    # per byte, and a purely size-derived width serializes it —
-    # measured +60% WALL on the golden-section NLL loop at 2 slices
-    # even as task-seconds fell 64%.  cores/4 keeps the wall flat and
-    # still cuts task launches 4x on a 32-slot host.
-    try:
-        return rightsize_width(df).localCheckpoint(eager=eager)
+        sized = df
+        if est is not None:
+            cores = spark.sparkContext.defaultParallelism
+            target = max(_size_width(est), cores // 4)
+            if target < df.rdd.getNumPartitions():
+                sized = df.coalesce(target)
+        return sized.localCheckpoint(eager=eager)
     except Exception:
         return df
 
@@ -200,22 +177,12 @@ def iteration_base(df: DataFrame, eager: bool = False) -> DataFrame:
 def ensure_parallelism(df: DataFrame,
                        est_bytes: Optional[int] = None) -> DataFrame:
     """Round-robin repartition when the source has far fewer partitions
-    than the cluster has slots (e.g. one small parquet file locally).
-    A no-op on real-scale inputs, which already arrive well-partitioned —
-    the guard keeps us from adding a gratuitous 100 TB shuffle.
-
-    The repartition width is scale-adaptive (r13, guide §2): when the
-    optimizer has a credible size estimate, target
-    ``clamp(ceil(size / spark.whylogs.taskTargetBytes),
-    MIN_ADAPTIVE_SLICES, defaultParallelism)`` so a 1 MB slice gets a
-    handful of tasks instead of one per core — each Python-stage task
-    costs ~0.3 s of fixed worker overhead, so width beyond the data is
-    pure waste.  Unknown estimate falls back to ``defaultParallelism``
-    (the pre-r13 behavior).
-    """
+    than the cluster has slots (e.g. one small parquet file locally),
+    to ``_size_width`` of the size estimate capped at the core count
+    (the full core count when the estimate is unknown).  A no-op on
+    inputs that already arrive well-partitioned."""
     try:
-        sc = df.sparkSession.sparkContext
-        target = sc.defaultParallelism
+        target = df.sparkSession.sparkContext.defaultParallelism
         nparts = df.rdd.getNumPartitions()
     except Exception:
         return df
@@ -224,14 +191,36 @@ def ensure_parallelism(df: DataFrame,
     if est_bytes is None:
         est_bytes = plan_size_estimate(df)
     if est_bytes is not None:
-        try:
-            tb = int(df.sparkSession.conf.get(
-                "spark.whylogs.taskTargetBytes", str(TASK_TARGET_BYTES)))
-        except Exception:
-            tb = TASK_TARGET_BYTES
-        tb = max(tb, 1)
-        sized = max(MIN_ADAPTIVE_SLICES, -(-est_bytes // tb))
-        target = min(target, sized)
+        target = min(target, _size_width(est_bytes))
     if nparts * 2 <= target:
         return df.repartition(target)
     return df
+
+
+def run_concurrently(spark, thunks: Sequence[Callable[[], object]],
+                     max_workers: Optional[int] = None) -> List[object]:
+    """Run independent ``thunks`` on fresh driver threads that inherit
+    the caller's job tags and local properties; return their results in
+    order.  Every thunk runs to completion.  A single failure is
+    re-raised as is; several raise one ``ExceptionGroup`` holding all
+    of them."""
+    thunks = list(thunks)
+    if not thunks:
+        return []
+    inherit = inheritable_thread_target(spark)
+    if not callable(inherit):
+        # PYSPARK_PIN_THREAD=false: pyspark hands the session back, and
+        # JVM threads hold no per-thread state to inherit
+        inherit = None
+    workers = min(max_workers or len(thunks), len(thunks))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futs = [pool.submit(inherit(th) if inherit else th)
+                for th in thunks]
+    errors = [e for e in map(Future.exception, futs) if e is not None]
+    if len(errors) == 1:
+        raise errors[0]
+    if errors:
+        raise BaseExceptionGroup(
+            f"{len(errors)} of {len(thunks)} concurrent jobs failed",
+            errors)
+    return [f.result() for f in futs]

@@ -198,8 +198,8 @@ def fit_logistic(
     # joins + any funnel) up to max_iter times.  Materialize the
     # projected (p+1)-column base once, right-sized (r13, same pattern
     # as the Cox / Huber fits); lazy so the first step pays for it.
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base)
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(base, eager=False)
     # x0 = intercept column of ones
     xcols = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(len(feats))]
 

@@ -1534,13 +1534,12 @@ def incremental_minhash_dedup(
     # two verify joins, the history probe keys, and the batch shingle
     # side): cut its lineage so the Arrow minhash pass runs once, not
     # five times (r13; conditional — a persisted-index batch is a plain
-    # scan and stays uncut).  batch << history by contract, so
-    # materializing the batch index is bounded.
-    from whylogs_spark.core.util import cut_derived_lineage
+    # scan and stays uncut).
+    from whylogs_spark.core.util import checkpoint
     # bounded=True: batch << history by contract, and the index
     # (signatures + shingle hashes) is strictly smaller than the text
     # it summarizes — the generic checkpoint size cap doesn't apply
-    b_idx = cut_derived_lineage(b_idx, bounded=True)
+    b_idx = checkpoint(b_idx, derived=True, bounded=True)
     if idx_cols <= set(history.columns):
         # persisted index: each consumer below reads the column it
         # needs, pruned at the scan — nothing to materialize

@@ -91,9 +91,9 @@ def seasonal_esd(
             .groupBy(time_col).agg(F.avg(v).alias("__v")))
     # the guard count, the phase-median branch and the deseasonalize
     # branch all consume the collapse — pay the upstream once when
-    # Catalyst bounds it (r13, cut_derived_lineage)
-    from whylogs_spark.core.util import cut_derived_lineage
-    base = cut_derived_lineage(base)
+    # Catalyst bounds it (core.util.checkpoint)
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(base, derived=True)
     n = base.count()
     if n > max_points:
         raise ValueError(

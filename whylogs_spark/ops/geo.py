@@ -329,8 +329,8 @@ def grid_cluster(
                 .filter(F.col("n") >= min_pts))
     # the guard count and the cell collect both consume the collapse —
     # pay the data pass once when Catalyst bounds it
-    from whylogs_spark.core.util import cut_derived_lineage
-    dense_df = cut_derived_lineage(dense_df)
+    from whylogs_spark.core.util import checkpoint
+    dense_df = checkpoint(dense_df, derived=True)
     n_dense = dense_df.count()
     if n_dense > max_dense_cells:
         raise ValueError(

@@ -192,8 +192,8 @@ def fit_poisson(
     # plus up to max_iter gradient/Hessian aggregates otherwise each
     # re-execute the full upstream plan (r13, same pattern as
     # causal.fit_logistic / the Cox and Huber fits).
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base)
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(base, eager=False)
     neg = base.filter(F.col("__y") < 0).limit(1).count()
     if neg:
         raise ValueError("fit_poisson: negative label values")

@@ -162,8 +162,8 @@ def temperature_scaling(
     base = df.filter(ok).select(
         y.alias("__y"), *[F.col(c).cast("double").alias(c)
                           for c in cols])
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base)
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(base, eager=False)
     lbl = F.col("__y")
 
     evals = [0]

@@ -80,8 +80,8 @@ def huber_regression(
     base = df.filter(cond).select(
         y.alias("__y"), *[F.col(c).cast("double").alias(f"__x{i}")
                           for i, c in enumerate(xs)])
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base, eager=True)
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(base)
     n = base.count()
     if n < p + 1:
         raise ValueError(f"huber_regression needs > {p} rows, got {n}")
@@ -174,8 +174,8 @@ def quantile_regression(
     base = df.filter(cond).select(
         y.alias("__y"), *[F.col(c).cast("double").alias(f"__x{i}")
                           for i, c in enumerate(xs)])
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base, eager=True)
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(base)
     n = base.count()
     if n < p + 1:
         raise ValueError(

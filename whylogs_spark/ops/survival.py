@@ -430,11 +430,11 @@ def cox_ph(
     n, n_events = int(means["__n"]), int(means["__ne"])
     if n == 0:
         raise ValueError("cox_ph: no usable rows")
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(raw.select(
+    from whylogs_spark.core.util import checkpoint
+    base = checkpoint(raw.select(
         "__t", "__e",
         *[(F.col(f"__x{j}") - F.lit(float(means[f"__m{j}"])))
-          .alias(f"__x{j}") for j in range(p)]), eager=True)
+          .alias(f"__x{j}") for j in range(p)]))
 
     beta = np.zeros(p)
     converged = False
