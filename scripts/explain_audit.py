@@ -268,11 +268,11 @@ def main() -> None:
                 r"^(?![\s\S]*\(\d+\) Exchange[\s\S]*\(\d+\) Exchange)",
         }))
 
-    # 7c. corpus-quality ops: Gopher rules and PII are pure per-row
-    # projections (the modal-token UDF is Arrow-batched, not row-wise
-    # Python); decontamination probes a broadcast benchmark gram set so
-    # only matches reach the doc_id shuffle; pack_chunks is one window
-    # exchange on the shard key
+    # 7c. corpus-quality ops: Gopher rules and PII are pure per-row JVM
+    # projections (the modal-token count is an in-plan run-length pass,
+    # no Python); decontamination probes a broadcast benchmark gram set
+    # so only matches reach the doc_id shuffle; pack_chunks is one
+    # window exchange on the shard key
     from whylogs_spark.ops import decontam, quality
     gq = quality.gopher_filter(docs).select(
         "doc_id", "dup_ngram_frac", "top_unigram_frac", "gopher_pass")
@@ -280,8 +280,8 @@ def main() -> None:
         "gopher quality filter", gq,
         {
             "no shuffle at all": r"^(?![\s\S]*Exchange)",
-            "Arrow-batched modal-token UDF (not row-wise Python)":
-                r"ArrowEvalPython",
+            "no Python in the plan":
+                r"^(?![\s\S]*(ArrowEvalPython|BatchEvalPython))",
         }))
     pii = quality.with_pii_stats(docs).select("doc_id", "n_pii")
     sections.append((

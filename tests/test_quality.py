@@ -588,3 +588,70 @@ def test_fuzzy_decontam_random_corpus_vs_python_model(spark):
         assert r.max_jaccard == pytest.approx(best[0]), (did, dtxt)
         assert r.matched_benchmark == best[1], (did, dtxt)
         assert r.is_contaminated == (best[0] >= 0.3)
+
+
+# ------------------------------------------------ token kernel (ops/_tokens)
+
+def test_top_unigram_frac_uses_the_rule_tokens(spark):
+    """The modal-token share divides by the same tokens ``rule_len_ok``
+    counts (``split(lower(trim(t)), '\\s+')``, the DuckDB oracle's
+    tokenizer): trim strips only U+0020, so a leading tab/newline gives
+    a leading "" token, and NBSP stays inside a token."""
+    cases = {0: ("\nx x y", 2, 4), 1: ("\tA a b c", 2, 5),
+             2: ("x\u00a0x y z", 1, 3)}
+    df = spark.createDataFrame([(i, t) for i, (t, _, _) in cases.items()],
+                               "doc_id long, text string")
+    out = quality.gopher_filter(df).select(
+        "doc_id", "top_unigram_frac",
+        F.size(quality._tokens(F.col("text"))).alias("n_tok"))
+    for r in out.collect():
+        _, modal, n_tok = cases[r.doc_id]
+        assert r.n_tok == n_tok
+        assert r.top_unigram_frac == modal / n_tok
+
+
+def _lambda_bodies(plan: str):
+    """Every ``lambdafunction(...)`` call of a plan string, parens
+    matched."""
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        yield plan[start:end + 1]
+        start = plan.find("lambdafunction(", start + 1)
+
+
+def test_text_kernels_tokenize_outside_lambdas(spark, docs):
+    """Plan-shape guard: no tokenizer (``split``/``regexp_replace``)
+    inside a lambda body — a lambda re-evaluates it per element, which
+    made every n-gram re-tokenize its document (O(tokens²)) — and no
+    Python in the Gopher filter, also under a downstream filter."""
+    from whylogs_spark.ops import dedup
+    from whylogs_spark.ops.text import ngram_diversity
+
+    text = F.col("text")
+    frames = {
+        "gopher": quality.gopher_filter(docs).filter("gopher_pass"),
+        "word_shingles": docs.select(dedup.word_shingles(text)),
+        "hashed_word_shingles": docs.select(
+            dedup.hashed_word_shingles(text)),
+        "char_shingles": docs.select(dedup.char_shingles(text)),
+        "decontam": docs.select(decontam.word_ngrams(text, 8)),
+        "blocklist": quality.with_blocklist_stats(
+            docs, ["spam"], phrases=["dup line", "a b c"]),
+        "ngram_diversity": ngram_diversity(docs, ns=(3,)),
+    }
+    for name, df in frames.items():
+        qe = df._jdf.queryExecution()
+        bodies = list(_lambda_bodies(qe.optimizedPlan().toString()))
+        assert bodies, name
+        for body in bodies:
+            assert "split(" not in body and "regexp_replace(" not in body, \
+                (name, body)
+        if name == "gopher":
+            physical = qe.executedPlan().toString()
+            assert "ArrowEvalPython" not in physical
+            assert "BatchEvalPython" not in physical

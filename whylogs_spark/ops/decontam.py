@@ -11,9 +11,10 @@ Scale shape (100 TB corpus, small benchmark):
 
 1. Benchmark side: explode to distinct n-grams — output is small
    (|benchmark| × tokens) and is broadcast.
-2. Corpus side: n-grams are built per-row with array HOFs (codegen)
-   and exploded; the join against the benchmark grams is a broadcast
-   hash join, so NO corpus-wide shuffle happens to find matches.
+2. Corpus side: n-grams are built per-row in-plan (linear in tokens,
+   ``ops/_tokens.py``) and exploded; the join against the benchmark
+   grams is a broadcast hash join, so NO corpus-wide shuffle happens
+   to find matches.
 3. Only matching (doc_id, gram) rows — a tiny fraction — flow into
    the final groupBy(doc_id) shuffle.
 
@@ -26,28 +27,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_WS = r"\s+"
-
-
-def _tokens(c: Column) -> Column:
-    t = F.lower(F.trim(c))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(t, _WS))
+from ._tokens import let, ngrams, word_tokens
 
 
 def word_ngrams(c: Column, n: int) -> Column:
     """Distinct word n-grams of lowercased text as space-joined
     strings; [] when the document has fewer than ``n`` tokens."""
-    toks = _tokens(c)
-    return F.array_distinct(
-        F.when(F.size(toks) < n, F.array().cast("array<string>"))
-        .otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.array_join(F.slice(toks, i, n), " "),
-            )
-        )
-    )
+    return F.array_distinct(let(word_tokens(c), lambda t: ngrams(t, n)))
 
 
 def benchmark_ngrams(
@@ -118,7 +104,7 @@ def fuzzy_decontaminate(
 
     Scale shape — EXACT, no MinHash needed, because one side is tiny:
     the benchmark's (id, gram, gram_count) explode is broadcast, so
-    the corpus-wide work is one scan + codegen n-gram build + a
+    the corpus-wide work is one scan + in-plan n-gram build + a
     broadcast hash probe. Keep ``n`` >= 5 on web-scale corpora: a
     short gram ("of the and") can match a large corpus fraction and
     the match volume — not the benchmark size — is what feeds the

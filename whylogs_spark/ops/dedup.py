@@ -30,6 +30,8 @@ from pyspark.sql import types as T
 
 from whylogs_spark.core.util import ensure_parallelism
 
+from ._tokens import let, ngrams, windows
+
 # Mixing constants for combining token hashes into n-gram hashes and the
 # (a*x + b) mod 2^64 permutation family (a odd => bijective). Seeded so
 # signatures are deterministic across runs/executors.
@@ -113,24 +115,18 @@ def duplicate_stats(
 # ---------------------------------------------------------------- shingles
 def word_shingles(c: Column, n: int = 3) -> Column:
     """Distinct word n-grams of the normalized text (empty-safe)."""
-    toks = F.split(normalized_text(c), " ")
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(
-        F.array_distinct(F.array(F.concat_ws(" ", toks))))
+    return let(F.split(normalized_text(c), " "), lambda t: F.when(
+        F.size(t) >= n, F.array_distinct(ngrams(t, n))
+    ).otherwise(F.array(F.concat_ws(" ", t))))
 
 
 def char_shingles(c: Column, n: int = 5) -> Column:
-    t = normalized_text(c)
-    k = F.length(t) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-        lambda i: F.substring(t, i, n),
-    )
-    return F.array_distinct(grams)
+    """Distinct character n-grams of the normalized text; the whole
+    text when it is shorter than ``n`` characters."""
+    return F.array_distinct(let(
+        F.split(normalized_text(c), ""), lambda ch: F.when(
+            F.size(ch) >= n, windows(ch, n, lambda w: F.concat(*w))
+        ).otherwise(F.array(F.array_join(ch, "")))))
 
 
 # ----------------------------------------------------------------- minhash
@@ -143,15 +139,13 @@ def hashed_word_shingles(
     token hashes with another xxhash64 over longs — so the expensive
     string hashing is O(#tokens), not O(#shingles × signature width).
     """
-    toks = F.split(normalized_text(c), " ")
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.xxhash64(*[F.get(th, i + j) for j in range(n)]),
-    )
-    short = F.array(F.xxhash64(F.concat_ws(" ", toks)))
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(short)
+    def grams(t: Column) -> Column:
+        return F.when(F.size(t) >= n, F.array_distinct(let(
+            F.transform(t, lambda x: F.xxhash64(x)),
+            lambda th: windows(th, n, lambda w: F.xxhash64(*w))))
+        ).otherwise(F.array(F.xxhash64(F.concat_ws(" ", t))))
+
+    return let(F.split(normalized_text(c), " "), grams)
 
 
 def shingle_hash_sets(
@@ -1216,14 +1210,10 @@ def _span_grams(df: DataFrame, n: int, id_col: str, text_col: str,
     base = df.select(
         F.col(id_col).alias("__id"), toks.alias("__toks")
     ).filter(F.size("__toks") >= n)
-    gram = f"array_join(slice(__toks, i + 1, {n}), ' ')"
-    key = gram if exact else f"xxhash64({gram})"
-    return base.select(
-        "__id",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, size(__toks) - {n}), i -> {key})"
-        )).alias("__pos", "__gk"),
-    )
+    key = (lambda g: g) if exact else F.xxhash64
+    return base.select("__id", F.posexplode(windows(
+        F.col("__toks"), n, lambda w: key(F.concat_ws(" ", *w)))
+    ).alias("__pos", "__gk"))
 
 
 def duplicate_spans(

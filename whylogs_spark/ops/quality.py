@@ -29,17 +29,20 @@ Operators
 
 Scale shape
 -----------
-Everything here is per-row compute: tokenization and n-gram
-construction use array higher-order functions (codegen, JVM); the one
-non-linear piece — the modal-token count — uses a Counter inside an
-Arrow-batched pandas UDF (O(tokens) per row) instead of the quadratic
-distinct×filter HOF, so cost stays linear in corpus size with zero
-shuffle and no driver participation.
+Everything here is per-row compute with zero shuffle, no Python and no
+driver participation. Tokenization, n-grams and the modal-token count
+are array higher-order functions, which Spark runs interpreted
+(``CodegenFallback``), so each document's tokens and lines are bound
+once and every signal derives from that binding (``ops/_tokens.py``):
+cost stays linear in tokens, also under a downstream
+``filter("gopher_pass")``.
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 import re
 from typing import Optional
 
@@ -49,14 +52,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-_WS = r"\s+"
-
-
-def _tokens(c: Column) -> Column:
-    """Whitespace tokens of lowercased trimmed text; [] for blank."""
-    t = F.lower(F.trim(c))
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")) \
-        .otherwise(F.split(t, _WS))
+from ._tokens import let, modal_count, ngrams, pairs_of
+from ._tokens import word_tokens as _tokens
 
 
 def _lines(c: Column) -> Column:
@@ -66,41 +63,54 @@ def _lines(c: Column) -> Column:
                     lambda x: F.length(x) > 0)
 
 
-def _word_ngrams(toks: Column, n: int) -> Column:
-    """Word n-grams as space-joined strings ([] when fewer than n
-    tokens). ``slice`` + ``sequence`` keeps this inside codegen."""
-    return F.when(
-        F.size(toks) < n, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
+_REPETITION = ("n_lines", "dup_line_frac", "dup_ngram_frac",
+               "top_unigram_frac")
+_SYMBOL = ("symbol_word_ratio", "ellipsis_line_frac", "bullet_line_frac")
 
 
-def _top_unigram_frac_udf():
-    """Fraction of tokens equal to the modal token — O(tokens) per doc
-    via a dict count (Arrow-batched; the HOF equivalent is O(tokens²)).
-    Built lazily: ``pandas_udf`` resolves its return type against the
-    active session, so the decorator cannot run at import time."""
+def _with_signals(df: DataFrame, text_col: str, ngram: int,
+                  names) -> DataFrame:
+    """Add the named per-document Gopher signals, plus the struct
+    ``__gopher`` holding them and ``n_tok``: every signal derives from
+    ONE binding of the document's tokens and lines."""
+    c = F.col(text_col)
+    # Gopher counts '#' and '…' as symbols; ASCII '...' counts once per
+    # occurrence (3 chars removed per hit)
+    n_sym = sum(F.length(c) - F.length(F.replace(c, F.lit(s)))
+                for s in ("#", "…"))
+    n_sym = (n_sym + (F.length(c) - F.length(F.replace(c, F.lit("..."))))
+             / 3).cast("double")
 
-    def frac(s) -> float:
-        if s is None:
-            return 0.0
-        toks = str(s).lower().split()
-        if not toks:
-            return 0.0
-        counts: dict = {}
-        for t in toks:
-            counts[t] = counts.get(t, 0) + 1
-        return max(counts.values()) / len(toks)
+    def body(b: Column) -> Column:
+        toks, lines = b["toks"], b["lines"]
+        n_tok, n_lines = F.size(toks), F.size(lines)
+        per_tok = lambda x: F.when(n_tok > 0, x / n_tok) \
+            .otherwise(F.lit(0.0))
+        dup_frac = lambda arr, k: F.when(k <= 0, F.lit(0.0)).otherwise(
+            1.0 - F.size(F.array_distinct(arr)).cast("double") / k)
+        frac_lines = lambda pred: F.when(n_lines <= 0, F.lit(0.0)) \
+            .otherwise(F.size(F.filter(lines, pred)).cast("double")
+                       / n_lines)
+        sig = {
+            "n_tok": n_tok,
+            "n_lines": n_lines,
+            "dup_line_frac": dup_frac(lines, n_lines),
+            "dup_ngram_frac": dup_frac(ngrams(toks, ngram),
+                                       n_tok - (ngram - 1)),
+            "top_unigram_frac": per_tok(modal_count(toks).cast("double")),
+            "symbol_word_ratio": per_tok(n_sym),
+            "ellipsis_line_frac": frac_lines(
+                lambda ln: ln.endswith("...") | ln.endswith("…")),
+            "bullet_line_frac": frac_lines(
+                lambda ln: ln.startswith("-") | ln.startswith("*")
+                | ln.startswith("•")),
+        }
+        return F.struct(*[sig[k].alias(k) for k in ("n_tok", *names)])
 
-    @pandas_udf("double")
-    def _udf(text: pd.Series) -> pd.Series:
-        return text.map(frac)
-
-    return _udf
+    g = let(F.struct(_tokens(c).alias("toks"), _lines(c).alias("lines")),
+            body)
+    return df.withColumn("__gopher", g) \
+        .withColumns({k: F.col("__gopher")[k] for k in names})
 
 
 def with_repetition_stats(
@@ -114,56 +124,12 @@ def with_repetition_stats(
       duplicate-share per n is the standard simplification).
     * ``top_unigram_frac`` — share of the modal token.
     """
-    c = F.col(text_col)
-    toks = _tokens(c)
-    lines = _lines(c)
-    grams = _word_ngrams(toks, ngram)
-    dup_frac = (
-        lambda arr: F.when(F.size(arr) <= 0, F.lit(0.0)).otherwise(
-            1.0 - F.size(F.array_distinct(arr)).cast("double")
-            / F.size(arr))
-    )
-    return (
-        df.withColumn("n_lines", F.size(lines))
-        .withColumn("dup_line_frac", dup_frac(lines))
-        .withColumn("dup_ngram_frac", dup_frac(grams))
-        .withColumn("top_unigram_frac", _top_unigram_frac_udf()(c))
-    )
-
-
-# Gopher counts '#' and '…' as symbols; '...' is the ASCII ellipsis.
-_SYMBOLS = ["#", "…"]
+    return _with_signals(df, text_col, ngram, _REPETITION).drop("__gopher")
 
 
 def with_symbol_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Symbol-to-word ratio and ellipsis/bullet line fractions."""
-    c = F.col(text_col)
-    toks = _tokens(c)
-    lines = _lines(c)
-    n_sym = None
-    for s in _SYMBOLS:
-        cnt = F.length(c) - F.length(F.replace(c, F.lit(s)))
-        n_sym = cnt if n_sym is None else n_sym + cnt
-    # ASCII '...' counts once per occurrence (3 chars removed per hit)
-    dots = (F.length(c) - F.length(F.replace(c, F.lit("...")))) / 3
-    n_sym = (n_sym + dots).cast("double")
-    n_tok = F.size(toks)
-    frac_lines = lambda pred: F.when(
-        F.size(lines) <= 0, F.lit(0.0)
-    ).otherwise(F.size(F.filter(lines, pred)).cast("double")
-                / F.size(lines))
-    return (
-        df.withColumn(
-            "symbol_word_ratio",
-            F.when(n_tok > 0, n_sym / n_tok).otherwise(F.lit(0.0)))
-        .withColumn("ellipsis_line_frac",
-                    frac_lines(lambda ln: ln.endswith("...")
-                               | ln.endswith("…")))
-        .withColumn("bullet_line_frac",
-                    frac_lines(lambda ln: ln.startswith("-")
-                               | ln.startswith("*")
-                               | ln.startswith("•")))
-    )
+    return _with_signals(df, text_col, 3, _SYMBOL).drop("__gopher")
 
 
 def gopher_filter(
@@ -182,29 +148,33 @@ def gopher_filter(
     published Gopher defaults (doc-length window, repetition caps,
     symbol caps). Rows are NOT dropped — filter on ``gopher_pass``
     downstream so rejection reasons stay auditable."""
-    d = with_repetition_stats(df, text_col)
-    d = with_symbol_stats(d, text_col)
-    n_tok = F.size(_tokens(F.col(text_col)))
-    d = (
-        d.withColumn("rule_len_ok", n_tok.between(min_tokens, max_tokens))
-        .withColumn("rule_dup_line_ok",
-                    F.col("dup_line_frac") <= max_dup_line_frac)
-        .withColumn("rule_dup_ngram_ok",
-                    F.col("dup_ngram_frac") <= max_dup_ngram_frac)
-        .withColumn("rule_top_unigram_ok",
-                    F.col("top_unigram_frac") <= max_top_unigram_frac)
-        .withColumn("rule_symbol_ok",
-                    F.col("symbol_word_ratio") <= max_symbol_word_ratio)
-        .withColumn("rule_ellipsis_ok",
-                    F.col("ellipsis_line_frac") <= max_ellipsis_line_frac)
-        .withColumn("rule_bullet_ok",
-                    F.col("bullet_line_frac") <= max_bullet_line_frac)
-    )
-    rules = [c for c in d.columns if c.startswith("rule_")]
-    verdict = F.lit(True)
-    for r in rules:
-        verdict = verdict & F.col(r)
-    return d.withColumn("gopher_pass", verdict)
+
+    def rules(g: Column) -> dict:
+        return {
+            "rule_len_ok": g["n_tok"].between(min_tokens, max_tokens),
+            "rule_dup_line_ok": g["dup_line_frac"] <= max_dup_line_frac,
+            "rule_dup_ngram_ok": g["dup_ngram_frac"] <= max_dup_ngram_frac,
+            "rule_top_unigram_ok":
+                g["top_unigram_frac"] <= max_top_unigram_frac,
+            "rule_symbol_ok":
+                g["symbol_word_ratio"] <= max_symbol_word_ratio,
+            "rule_ellipsis_ok":
+                g["ellipsis_line_frac"] <= max_ellipsis_line_frac,
+            "rule_bullet_ok": g["bullet_line_frac"] <= max_bullet_line_frac,
+        }
+
+    own = rules(F.col("__gopher"))
+    d = _with_signals(df, text_col, 3, _REPETITION + _SYMBOL) \
+        .withColumns(own)
+    # the verdict reads the signal struct through one binding, so a
+    # pushed-down filter on it evaluates the signals once; rule_*
+    # columns the input already carried stay in the verdict
+    v = let(F.col("__gopher"),
+            lambda g: functools.reduce(operator.and_, rules(g).values()))
+    for r in df.columns:
+        if r.startswith("rule_") and r not in own:
+            v = v & F.col(r)
+    return d.withColumn("gopher_pass", v).drop("__gopher")
 
 
 # RE2-safe PII patterns (no lookaround, no backrefs) so the identical
@@ -324,7 +294,7 @@ def with_blocklist_stats(
 
     The word set ships as an array literal into the plan (bounded:
     real blocklists are a few hundred entries), so matching is a pure
-    codegen projection — zero shuffle, no join, no Python.
+    JVM projection — zero shuffle, no join, no Python.
     """
     norm_words = set()
     for w in words:
@@ -357,19 +327,18 @@ def with_blocklist_stats(
                     f"phrase {p!r} has fewer than 2 word tokens; put "
                     "single words in `words`")
             by_k.setdefault(len(pt), set()).add(" ".join(pt))
-        pc = None
-        for k, pset in sorted(by_k.items()):
-            # guard: sequence(1, 0) would generate DESCENDING [1, 0]
-            grams = F.when(
-                F.size(toks) < k, F.array().cast("array<string>")
-            ).otherwise(F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-                lambda i: F.array_join(F.slice(toks, i, k), " ")))
-            plits = F.array(*[F.lit(p) for p in sorted(pset)])
-            cnt = F.size(F.filter(
-                grams, lambda g: F.array_contains(plits, g))).cast("long")
-            pc = cnt if pc is None else pc + cnt
-        out = out.withColumn("blocklist_phrase_count", pc)
+
+        def count(t: Column) -> Column:
+            pc = None
+            for k, pset in sorted(by_k.items()):
+                plits = F.array(*[F.lit(p) for p in sorted(pset)])
+                cnt = F.size(F.filter(
+                    ngrams(t, k), lambda g: F.array_contains(plits, g))
+                ).cast("long")
+                pc = cnt if pc is None else pc + cnt
+            return pc
+
+        out = out.withColumn("blocklist_phrase_count", let(toks, count))
         total = total + F.col("blocklist_phrase_count")
     return out.withColumn("blocklist_ok", total == 0)
 
@@ -511,14 +480,7 @@ def train_bigram_lm(
     broadcast join against the unigram counts for the denominator, and
     a distributed top-K cap (TakeOrderedAndProject). Action-free.
     """
-    toks = _tokens(F.col(text_col))
-    n = F.size(toks)
-    pairs = F.when(
-        n >= 2,
-        F.zip_with(F.slice(toks, 1, n - 1),
-                   F.slice(toks, 2, n - 1),
-                   lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = let(_tokens(F.col(text_col)), pairs_of)
     pc = (
         df.select(F.explode(pairs).alias("p"))
         .select("p.w1", "p.w2")
@@ -572,14 +534,7 @@ def bigram_lm_scores(
     if bigram_lm is None:
         bigram_lm = train_bigram_lm(df, text_col, max_bigrams)
     oov = unigram_lm.agg(F.first("oov_logprob").alias("__oov"))
-    toks = _tokens(F.col(text_col))
-    n = F.size(toks)
-    pairs = F.when(
-        n >= 2,
-        F.zip_with(F.slice(toks, 1, n - 1),
-                   F.slice(toks, 2, n - 1),
-                   lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    pairs = let(_tokens(F.col(text_col)), pairs_of)
     exploded = df.select(
         F.col(id_col), F.explode(pairs).alias("p")
     ).select(id_col, "p.w1", "p.w2")

@@ -1,8 +1,9 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All hot-path expressions are built-in ``pyspark.sql.functions`` (JVM,
-whole-stage codegen) — no Python UDFs — so they survive a 100 TB scan:
-a single narrow projection pass, no shuffle.
+All hot-path expressions are built-in ``pyspark.sql.functions`` (JVM;
+scalar ones in whole-stage codegen, array higher-order functions
+interpreted) — no Python UDFs — so they survive a 100 TB scan: a single
+narrow projection pass, no shuffle.
 
 Operators:
   * token / character statistics (``with_text_stats``)
@@ -18,6 +19,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._tokens import let, ngrams, word_tokens
 
 # Tiny per-language stopword marker sets for the heuristic language ID.
 # Deliberately small + deterministic (an n-gram model would need model
@@ -683,10 +686,7 @@ def vocab_growth(
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}")
     c = F.col(text_col)
-    lowered = F.lower(F.trim(c))
-    tok = (df.filter(c.isNotNull() & (F.trim(c) != ""))
-           .select(F.col(id_col),
-                   F.explode(F.split(lowered, _WS)).alias("__tok")))
+    tok = df.select(F.col(id_col), F.explode(word_tokens(c)).alias("__tok"))
     first = tok.groupBy("__tok").agg(F.min(id_col).alias(id_col))
     newt = first.groupBy(id_col).agg(F.count("*").alias("__nt"))
     per = df.select(F.col(id_col),
@@ -730,33 +730,20 @@ def ngram_diversity(
     BITS, computed as ``log2(N) - sum(c*log2(c))/N``. Whitespace-only
     documents contribute nothing.
 
-    Scale shape per order: tokenize + n-gram expansion in-scan
-    (codegen), ONE partial-agg shuffle to (group, gram) counts, then
-    a bounded per-group reduction; orders union into one frame.
+    Scale shape per order: tokenize + n-gram expansion in-scan, linear
+    in tokens (interpreted array functions over tokens bound once, see
+    ``ops/_tokens.py``), ONE partial-agg shuffle to (group, gram)
+    counts, then a bounded per-group reduction; orders union into one
+    frame.
     """
     ns = list(ns)
     if not ns or any(n < 1 for n in ns):
         raise ValueError(f"ns must be non-empty positive orders: {ns}")
     groups = [group_col] if group_col else []
-    t = F.lower(F.trim(F.col(text_col)))
-    toks = F.when(F.length(t) > 0, F.split(t, r"\s+")) \
-        .otherwise(F.array().cast("array<string>"))
+    toks = word_tokens(F.col(text_col))
     parts = []
     for n in ns:
-        if n == 1:
-            grams = toks
-        else:
-            k = F.size(toks) - (n - 1)
-            # the transform lambda must be ARITY 1 — PySpark treats a
-            # two-parameter lambda as (element, array_index), so a
-            # `_n=n` default would be silently shadowed by the index
-            grams = F.when(
-                k >= 1,
-                F.transform(
-                    F.sequence(F.lit(0), k - 1),
-                    (lambda _n: lambda i: F.concat_ws(
-                        " ", F.slice(toks, i + 1, _n)))(n),
-                )).otherwise(F.array().cast("array<string>"))
+        grams = toks if n == 1 else let(toks, lambda t: ngrams(t, n))
         ex = df.select(*groups, F.explode(grams).alias("__g"))
         counts = ex.groupBy(*groups, "__g").agg(
             F.count(F.lit(1)).alias("__c"))
