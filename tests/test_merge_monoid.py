@@ -181,3 +181,33 @@ def test_merge_nondefault_config(lineitem, halves):
     # exact components still exact
     assert merged.get_component("l_quantity", "counts", "n") == \
         whole.get_component("l_quantity", "counts", "n")
+
+
+def test_identity_merge_keeps_cardinality_bounds(spark):
+    """``merge_profiles([v])`` and ``merge_segments`` of a one-segment
+    view are identities on the cardinality bounds: the merge finishes
+    the union sketch with the planner's mode-aware bounds, so a
+    constraint verdict read off them does not change. 205 rows with 200
+    distinct values are not unique."""
+    from whylogs_spark.core.constraints import (ConstraintsBuilder,
+                                                column_is_probably_unique)
+
+    df = spark.range(205).selectExpr("CAST(id % 200 AS INT) AS x",
+                                     "'a' AS g")
+    v = wsp.profile(df, columns=["x"])
+    seg = wsp.profile(df, columns=["x"], segment_by=["g"])
+
+    def bounds(view):
+        return [view.get_component("x", "cardinality", c)
+                for c in ("lower", "upper")]
+
+    def unique(view):
+        return ConstraintsBuilder(view).add(
+            column_is_probably_unique("x")).build().validate()
+
+    want = bounds(v)
+    assert want[0] <= 200 <= want[1] < 205
+    assert unique(v) is False
+    for merged in (wsp.merge_profiles([v]), wsp.merge_segments(seg)):
+        assert bounds(merged) == pytest.approx(want, rel=1e-9)
+        assert unique(merged) is False

@@ -152,3 +152,52 @@ def test_segment_key_rendering_parity_across_paths(spark):
         sketch = {r["segment"] for r in v.df.filter(
             "component='kll'").select("segment").distinct().collect()}
         assert sketch <= native, (native, sketch)
+
+
+def test_distributed_fallback_matches_collected(spark, monkeypatch):
+    """Past ``_SEGMENT_COLLECT_LIMIT`` segments the segmented profile
+    falls back to the distributed explode path (``_native_long``); its
+    exact components must equal those of the collected path."""
+    from whylogs_spark.core import profiler
+
+    df = spark.range(0, 600, 1, 4).selectExpr(
+        "cast(id % 4 AS string) AS g", "id % 37 AS i", "id / 3.0 AS f",
+        "CASE WHEN id % 11 = 0 THEN NULL ELSE concat('s', id % 9) END AS s",
+        "id % 2 = 0 AS b",
+        "timestamp_seconds(id * 3600) AS t")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
+
+    def rows():
+        view = wsp.profile(df, segment_by=["g"], config=cfg)
+        return {(r["segment"], r["column"], r["metric"], r["component"]):
+                (r["n"], r["d"]) for r in view.df.collect()}
+
+    collected = rows()
+    taken = []
+    native_long = profiler._native_long
+    monkeypatch.setattr(profiler, "_SEGMENT_COLLECT_LIMIT", 1)
+    monkeypatch.setattr(profiler, "_native_long",
+                        lambda *a: taken.append(1) or native_long(*a))
+    distributed = rows()
+
+    assert taken, "the distributed fallback was not taken"
+    assert set(distributed) == set(collected)
+    assert len({k[0] for k in collected}) == 4
+    for key, (n, d) in collected.items():
+        n2, d2 = distributed[key]
+        assert n2 == n, key
+        if d is None:
+            assert d2 is None, key
+        else:
+            assert d2 == pytest.approx(d, rel=1e-9), key
+
+
+def test_profile_partitions_rejects_duplicate_grouping_sets(spark):
+    """Two partitions over the same key set are one grouping set, and
+    Spark would emit each of its groups twice: the call is refused
+    instead of answered with duplicated profile rows."""
+    from whylogs_spark.core.profiler import profile_partitions
+
+    df = spark.range(4).selectExpr("CAST(id % 2 AS STRING) AS g", "id AS x")
+    with pytest.raises(ValueError, match="same columns"):
+        profile_partitions(df, {"a": ["g"], "b": ["g"]}, columns=["x"])

@@ -46,6 +46,19 @@ def frame(spark):
         cols.append((F.col("id") % (2 + i) == 0).alias(f"b{i}"))
     cols.append(F.timestamp_seconds(F.col("id") * 3600).alias("t0"))
     cols.append(F.array(F.col("id").cast("double")).alias("arr0"))
+    # class mixing: each column below shares a type class with a column
+    # above but not its Spark type, so it stacks through a cast
+    for t in ("byte", "short", "int"):
+        cols.append((F.col("id") % 127 - 60).cast(t).alias(f"n_{t}"))
+    cols.append(F.date_add(F.lit("2020-01-01").cast("date"),
+                           (F.col("id") % 400).cast("int")).alias("d0"))
+    cols.append(F.timestamp_seconds(F.col("id") * 977)
+                .cast("timestamp_ntz").alias("tntz0"))
+    cols.append(F.when(F.col("id") % 89 == 0, None)
+                .otherwise(F.col("id") / 7).cast("decimal(12,3)")
+                .alias("dec0"))
+    cols.append(F.when(F.col("id") % 5 == 0, None)
+                .otherwise(F.col("id") % 3 == 0).alias("bnull0"))
     return base.select(*cols)
 
 

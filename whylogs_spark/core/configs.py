@@ -41,9 +41,12 @@ class MetricConfig:
     #            | "approx" (approx_count_distinct, estimate only)
     cardinality_impl: str = "hll"
     # At/above this many profiled columns, switch to the wide path
-    # (unpivot per type class + groupBy(colname): O(1) plan size — see
+    # (unpivot per type class + groupBy(column id): O(1) plan size — see
     # core/wide.py). Below it, the narrow per-column-expression path
     # (vectorized per-column aggregates; plan cost amortizes over rows).
+    # Both paths run the same metric program (planner.plan_column: once
+    # per column narrow, once per type class wide), so the switch changes
+    # plan shape only, never the profile's components.
     wide_column_threshold: int = 96
 
     @property

@@ -1,4 +1,4 @@
-"""Resolver / expression planner.
+"""Resolver / expression planner: the one metric program.
 
 Replaces the reference's resolver machinery (reference:
 python/whylogs/core/resolvers.py:187-217 — the STANDARD program mapping
@@ -10,6 +10,14 @@ expressions executed in ONE ``df.agg(...)`` / ``groupBy(...).agg(...)``
 pass — Catalyst then gives us map-side partial aggregation for free
 (vs. the reference's hand-rolled mapInPandas+shuffle at
 python/whylogs/api/pyspark/experimental/profiler.py:70-73).
+
+``plan_column`` is the only code that decides what a profile contains.
+Every profiling path runs its plan: the narrow path (one plan per
+column), the wide path (one plan per type class, over the class's
+exploded ``val`` column — core/wide.py), the grouping-sets path
+(``profile_partitions``) and the streaming aggregation
+(streaming/rolling.py). ``plan_sketches`` is the same program's choice of
+KLL/frequent-items sketches.
 
 Standard metric program (parity with reference resolvers.py):
   Integral   -> counts, types, distribution, ints, cardinality, frequent_items
@@ -158,7 +166,6 @@ def plan_column(
     vt = value_type_of(dt)
     c = qcol(col)
     aggs: List[PlannedAgg] = []
-    sketches: List[SketchPlan] = []
 
     def add(metric: str, component: str, slot: str, expr: Column,
             tier: str = "codegen", emit: bool = True) -> str:
@@ -249,9 +256,6 @@ def plan_column(
                 add_derived(
                     "distribution", _q_name(q), SLOT_D, qalias,
                     _item_getter(i), tier="object")
-        elif cfg.quantile_impl == "kll":
-            sketches.append(
-                SketchPlan(col, "kll", nv, f"__kll__{aliases.next()}"))
 
     # ---- ints (reference: metrics.py:165)
     if vt == ValueType.INTEGRAL:
@@ -283,15 +287,6 @@ def plan_column(
                 F.approx_count_distinct(sv).cast(T.DoubleType()),
                 tier="codegen")
 
-    # ---- frequent items (reference: metrics.py:444)
-    if cfg.frequent_items_impl == "sketch" and vt in (
-        ValueType.INTEGRAL, ValueType.BOOLEAN, ValueType.STRING,
-        ValueType.TEMPORAL,
-    ):
-        sketches.append(
-            SketchPlan(col, "fi", _string_view(col, vt),
-                       f"__fi__{aliases.next()}"))
-
     # ---- registered custom metrics (reference plug-in surface:
     # @custom_metric/register_metric, metrics.py:60,156) — user-supplied
     # aggregate expressions run in the same codegen pass as built-ins
@@ -303,7 +298,26 @@ def plan_column(
         for comp in m.components:
             add(m.namespace, comp.component, comp.slot, comp.expr(c))
 
-    return aggs, sketches
+    return aggs, plan_sketches(col, dt, cfg, aliases)
+
+
+def plan_sketches(col: str, dt: T.DataType, cfg: MetricConfig,
+                  aliases: "_AliasGen") -> List[SketchPlan]:
+    """The column's python-sketch projections: KLL quantiles over the
+    numeric view (reference: metrics.py:217) and frequent items over the
+    string view (reference: metrics.py:444)."""
+    vt = value_type_of(dt)
+    out: List[SketchPlan] = []
+    if cfg.quantile_impl == "kll" and vt in (
+            ValueType.INTEGRAL, ValueType.FRACTIONAL, ValueType.TEMPORAL):
+        out.append(SketchPlan(col, "kll", _numeric_view(col, vt),
+                              f"__kll__{aliases.next()}"))
+    if cfg.frequent_items_impl == "sketch" and vt in (
+            ValueType.INTEGRAL, ValueType.BOOLEAN, ValueType.STRING,
+            ValueType.TEMPORAL):
+        out.append(SketchPlan(col, "fi", _string_view(col, vt),
+                              f"__fi__{aliases.next()}"))
+    return out
 
 
 def _q_name(q: float) -> str:

@@ -52,8 +52,8 @@ from pyspark.sql import types as T
 
 from .configs import DEFAULT_CONFIG, MetricConfig
 from .planner import (
-    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, SketchPlan, _q_name,
-    plan_dataframe,
+    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, SketchPlan, _hll_bounds,
+    _hll_estimate, _q_name, plan_dataframe,
 )
 from .sketches import FrequentStringsSketch, KllSketch
 from .util import checkpoint, run_concurrently
@@ -102,18 +102,23 @@ def _segment_json_py(keys: List[str], values: Iterable) -> str:
 
 
 # --------------------------------------------------------------------- native
+_SLOT_TYPES = ((SLOT_N, T.LongType()), (SLOT_D, T.DoubleType()),
+               (SLOT_S, T.StringType()), (SLOT_B, T.BinaryType()))
+
+
+def _slot_fields(slot: str, value: Column) -> List[Column]:
+    """The typed n/d/s/b columns of one component: ``value`` cast into
+    its slot, typed nulls in the other three."""
+    return [(value if s == slot else F.lit(None)).cast(dt).alias(s)
+            for s, dt in _SLOT_TYPES]
+
+
 def _long_structs(aggs: List[PlannedAgg]) -> List[Column]:
     """One struct literal per emitted component, typed-slot aligned.
 
     A component's value is its agg alias, or ``derive(col(derive_from))``
     for post-agg projections (hll estimate/bounds, quantile array items).
     """
-
-    def null_slot(slot: str) -> Column:
-        dt = {SLOT_N: T.LongType(), SLOT_D: T.DoubleType(),
-              SLOT_S: T.StringType(), SLOT_B: T.BinaryType()}[slot]
-        return F.lit(None).cast(dt)
-
     structs = []
     for a in aggs:
         if not a.emit:
@@ -124,20 +129,12 @@ def _long_structs(aggs: List[PlannedAgg]) -> List[Column]:
             value = a.derive(F.col(a.derive_from))
         else:
             value = F.col(a.alias)
-        fields = [
+        structs.append(F.struct(
             F.lit(a.column).alias("column"),
             F.lit(a.metric).alias("metric"),
             F.lit(a.component).alias("component"),
-        ]
-        for slot, dt in ((SLOT_N, T.LongType()), (SLOT_D, T.DoubleType()),
-                         (SLOT_S, T.StringType()), (SLOT_B, T.BinaryType())):
-            if slot == a.slot:
-                fields.append(value.cast(dt).alias(slot))
-            else:
-                fields.append(null_slot(slot).alias(slot))
-        structs.append(F.struct(*fields))
+            *_slot_fields(a.slot, value)))
     return structs
-
 
 
 def _local_profile_df(spark, rows):
@@ -164,27 +161,78 @@ def _by_tier(aggs: List[PlannedAgg]) -> List[tuple]:
 _COERCE = {SLOT_N: int, SLOT_D: float, SLOT_S: lambda v: v, SLOT_B: bytes}
 
 
-def _slot_rows(seg: str, tier_aggs: List[PlannedAgg], values: dict):
+def _slot_rows(seg: str, aggs: List[PlannedAgg], values: dict,
+               column: Optional[str] = None):
     """Long-form profile rows of one collected agg row: each emitted
-    agg's value, coerced into its typed n/d/s/b slot."""
-    for a in tier_aggs:
+    agg's value, coerced into its typed n/d/s/b slot. ``column``
+    overrides the planned column name (the wide path plans ``val``)."""
+    for a in aggs:
         if not a.emit:
             continue
         v = a.const if a.const is not None else values.get(a.alias)
         slots = dict.fromkeys((SLOT_N, SLOT_D, SLOT_S, SLOT_B))
         if v is not None:
             slots[a.slot] = _COERCE[a.slot](v)
-        yield (seg, a.column, a.metric, a.component, *slots.values())
+        yield (seg, column or a.column, a.metric, a.component,
+               *slots.values())
+
+
+def _tier_frame(df: DataFrame, aggs: List[PlannedAgg],
+                aggregate=None, keys: Iterable[Column] = ()) -> DataFrame:
+    """Planned aggregates as one agg frame: ``aggregate(df, exprs)``
+    (a global ``df.agg`` when None), then the ``keys`` columns, the
+    emitted base components and the derived ones, by alias."""
+    if all(a.tier == "object" for a in aggs):
+        # interpreted ObjectHashAggregate: make sure the partial-agg stage
+        # actually has cores to run on (codegen'd declarative aggs chew
+        # through a single unsplittable local file faster than the
+        # round-robin shuffle that would parallelize them)
+        df = _ensure_parallelism(df)
+    base = [a for a in aggs if a.expr is not None]
+    exprs = [a.expr.alias(a.alias) for a in base]
+    wide = aggregate(df, exprs) if aggregate else df.agg(*exprs)
+    return wide.select(
+        *keys, *[F.col(a.alias) for a in base if a.emit],
+        *[a.derive(F.col(a.derive_from)).alias(a.alias)
+          for a in aggs if a.derive is not None])
+
+
+def _unsegmented(_row: dict) -> tuple:
+    return None, "{}", None
+
+
+def _run_tier(df: DataFrame, aggs: List[PlannedAgg], aggregate=None,
+              keys: Iterable[Column] = (), label=_unsegmented,
+              limit: Optional[int] = None) -> Optional[Dict[object, list]]:
+    """The one driver-side runner of planned aggregates: build the
+    ``_tier_frame``, collect it (at most ``limit`` rows when given) and
+    reshape every agg row with ``_slot_rows``. ``label(row)`` names the
+    row's ``(dest, segment, column)``; the long-form rows come back as
+    ``{dest: rows}``, or None when more than ``limit`` agg rows do."""
+    frame = _tier_frame(df, aggs, aggregate, keys)
+    if limit is None:
+        rows = frame.collect()
+    else:
+        rows = frame.limit(limit + 1).collect()
+        if len(rows) > limit:
+            return None
+    out: Dict[object, list] = {}
+    for r in rows:
+        rd = r.asDict()
+        dest, seg, column = label(rd)
+        out.setdefault(dest, []).extend(_slot_rows(seg, aggs, rd, column))
+    return out
+
+
+def _long_rows(results: Iterable[Dict[object, list]]) -> List[tuple]:
+    """All long-form rows of several ``_run_tier`` results."""
+    return [row for res in results for rows in res.values() for row in rows]
 
 
 def _native_long_one_tier(
     df: DataFrame, aggs: List[PlannedAgg], segment_cols: List[str]
 ) -> DataFrame:
     if aggs and aggs[0].tier == "object":
-        # interpreted ObjectHashAggregate: make sure the partial-agg stage
-        # actually has cores to run on (codegen'd declarative aggs chew
-        # through a single unsplittable local file faster than the
-        # round-robin shuffle that would parallelize them)
         df = _ensure_parallelism(df)
     exprs = [a.expr.alias(a.alias) for a in aggs if a.expr is not None]
     if segment_cols:
@@ -233,33 +281,16 @@ def _segmented_native_long(
     the 1000+-expression explode projection. Past the limit, fall back to
     the fully-distributed explode path.
     """
-    spark = df.sparkSession
-
-    def run_tier(tier, tier_aggs):
-        base = [a for a in tier_aggs if a.expr is not None]
-        src = _ensure_parallelism(df) if tier == "object" else df
-        wide = src.groupBy(*segment_cols).agg(
-            *[a.expr.alias(a.alias) for a in base])
-        derived = [a for a in tier_aggs if a.derive is not None]
-        seg = _segment_json_col(segment_cols).alias("__segment")
-        sel = [seg] + [F.col(a.alias) for a in base if a.emit] + [
-            a.derive(F.col(a.derive_from)).alias(a.alias) for a in derived
-        ]
-        rows = wide.select(*sel).limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
-        return tier_aggs, rows
-
-    results = run_concurrently(
-        spark, [partial(run_tier, *item) for item in _by_tier(aggs)])
-
-    if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, rows in results):
+    results = run_concurrently(df.sparkSession, [
+        partial(_run_tier, df, tier_aggs,
+                lambda d, e: d.groupBy(*segment_cols).agg(*e),
+                [_segment_json_col(segment_cols).alias("__segment")],
+                lambda rd: (None, rd["__segment"], None),
+                _SEGMENT_COLLECT_LIMIT)
+        for _, tier_aggs in _by_tier(aggs)])
+    if any(res is None for res in results):
         return _native_long(df, aggs, segment_cols)  # distributed fallback
-
-    out_rows: List[tuple] = []
-    for tier_aggs, rows in results:
-        for row in rows:
-            rd = row.asDict()
-            out_rows.extend(_slot_rows(rd["__segment"], tier_aggs, rd))
-    return _local_profile_df(spark, out_rows)
+    return _local_profile_df(df.sparkSession, _long_rows(results))
 
 
 def _native_long_collected(
@@ -273,16 +304,14 @@ def _native_long_collected(
     ONE row; a flat select + driver reshape is plan-size O(#aggs) and the
     collected payload is a few KB of profile components.
     """
-    spark = df.sparkSession
-
     # Chunk each tier by source column (a derived agg always lives with
     # its derive_from base, which the planner emits for the same column).
     # Each chunk is an independent Spark job, so Catalyst analysis +
     # whole-stage-codegen compile — the dominant cost for a 200-agg plan
     # over ONE local file — happens in parallel threads. Column pruning
     # keeps each chunk's parquet scan narrow.
-    work: List[tuple] = []
-    for tier, tier_aggs in _by_tier(aggs):
+    work: List[List[PlannedAgg]] = []
+    for _, tier_aggs in _by_tier(aggs):
         by_col: Dict[str, List[PlannedAgg]] = {}
         for a in tier_aggs:
             by_col.setdefault(a.column, []).append(a)
@@ -294,25 +323,12 @@ def _native_long_collected(
         # the per-job codegen unit size.
         chunk_cols = max(6, -(-len(cols) // 8))
         for i in range(0, len(cols), chunk_cols):
-            chunk = [a for c in cols[i:i + chunk_cols] for a in by_col[c]]
-            work.append((tier, chunk))
-
-    def run_chunk(tier, tier_aggs):
-        base = [a for a in tier_aggs if a.expr is not None]
-        src = _ensure_parallelism(df) if tier == "object" else df
-        wide = src.agg(*[a.expr.alias(a.alias) for a in base])
-        derived = [a for a in tier_aggs if a.derive is not None]
-        sel = [F.col(a.alias) for a in base if a.emit] + [
-            a.derive(F.col(a.derive_from)).alias(a.alias) for a in derived
-        ]
-        return tier_aggs, wide.select(*sel).collect()[0].asDict()
+            work.append([a for c in cols[i:i + chunk_cols] for a in by_col[c]])
 
     results = run_concurrently(
-        spark, [partial(run_chunk, *item) for item in work], max_workers=8)
-    out_rows: List[tuple] = []
-    for tier_aggs, row in results:
-        out_rows.extend(_slot_rows("{}", tier_aggs, row))
-    return _local_profile_df(spark, out_rows)
+        df.sparkSession, [partial(_run_tier, df, chunk) for chunk in work],
+        max_workers=8)
+    return _local_profile_df(df.sparkSession, _long_rows(results))
 
 
 # --------------------------------------------------------------------- sketch
@@ -411,49 +427,45 @@ def _sketch_long(
 
     partial = proj.mapInArrow(sketch_partition, out_schema)
 
-    quantiles = list(cfg.quantiles)
-    fi_topk = 32
-
-    merged_schema = PROFILE_SCHEMA
-
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = pdf["segment"].iloc[0]
-        colname = pdf["column"].iloc[0]
-        metric = pdf["metric"].iloc[0]
-        component = pdf["component"].iloc[0]
-        out = []
-        if component == "kll":
-            sk = KllSketch(kll_k)
-            for blob in pdf["b"]:
-                if blob is not None:
-                    sk.merge(KllSketch.deserialize(bytes(blob)))
-            out.append((seg, colname, metric, "kll", None, None, None,
-                        sk.serialize()))
-            for q, v in zip(quantiles, sk.quantiles(quantiles)):
-                out.append((seg, colname, metric, _q_name(q), None,
-                            float(v), None, None))
-        else:
-            sk = FrequentStringsSketch(fi_cap, fi_maxlen)
-            for blob in pdf["b"]:
-                if blob is not None:
-                    sk.merge(FrequentStringsSketch.deserialize(bytes(blob)))
-            out.append((seg, colname, metric, "mg", None, None, None,
-                        sk.serialize()))
-            items = [
-                {"value": v, "est": e, "lower": lo, "upper": hi}
-                for v, e, lo, hi in sk.top_k(fi_topk)
-            ]
-            out.append((seg, colname, metric, "items", None, None,
-                        json.dumps(items, ensure_ascii=False), None))
+        key = [pdf[c].iloc[0] for c in ("segment", "column", "metric")]
         return pd.DataFrame(
-            out,
-            columns=["segment", "column", "metric", "component",
-                     "n", "d", "s", "b"],
-        )
+            [(*key, *r) for r in
+             _finish_sketch(pdf["component"].iloc[0], pdf["b"], cfg)],
+            columns=PROFILE_SCHEMA.fieldNames())
 
     return partial.groupBy("segment", "column", "metric", "component").applyInPandas(
-        merge_group, merged_schema
+        merge_group, PROFILE_SCHEMA
     )
+
+
+_FI_TOP_K = 32
+
+
+def _finish_sketch(component: str, blobs: Iterable,
+                   cfg: MetricConfig) -> List[tuple]:
+    """Merge one column's KLL (``kll``) or Misra-Gries (``mg``) sketch
+    blobs and finish them: ``(component, n, d, s, b)`` rows for the
+    merged sketch plus its quantiles, or plus its top-32 ``items``."""
+    if component == "kll":
+        sk = KllSketch(cfg.effective_kll_k)
+    else:
+        sk = FrequentStringsSketch(cfg.fi_capacity,
+                                   cfg.max_frequent_item_size)
+    for blob in blobs:
+        if blob is not None:
+            sk.merge(type(sk).deserialize(bytes(blob)))
+    out = [(component, None, None, None, sk.serialize())]
+    if component == "kll":
+        quantiles = list(cfg.quantiles)
+        out += [(_q_name(q), None, float(v), None, None)
+                for q, v in zip(quantiles, sk.quantiles(quantiles))]
+    else:
+        items = [{"value": v, "est": e, "lower": lo, "upper": hi}
+                 for v, e, lo, hi in sk.top_k(_FI_TOP_K)]
+        out.append(("items", None, None,
+                    json.dumps(items, ensure_ascii=False), None))
+    return out
 
 
 # -------------------------------------------------------------------- profile
@@ -572,57 +584,50 @@ def profile_partitions(
             if c not in all_cols:
                 all_cols.append(c)
     n = len(all_cols)
-    gid_for_part = {
-        pname: sum(
-            1 << (n - 1 - i)
-            for i, c in enumerate(all_cols) if c not in cols
-        )
+    # grouping_id() of each partition's grouping set
+    part_of_gid = {
+        sum(1 << (n - 1 - i) for i, c in enumerate(all_cols)
+            if c not in cols): (pname, cols)
         for pname, cols in part_items
     }
+    if len(part_of_gid) < len(part_items):
+        # one grouping set listed twice makes Spark emit each group twice
+        raise ValueError(
+            "profile_partitions: two partitions group by the same "
+            "columns; profile that segmentation once")
     sets_exprs = [[F.col(c) for c in cols] for _, cols in part_items]
 
     df, columns = flatten_struct_columns(df, columns, all_cols)
     df = checkpoint(df, derived=True)
     aggs, sketches = plan_dataframe(df.schema, columns, all_cols, config)
 
-    def run_tier(tier, tier_aggs):
-        base = [a for a in tier_aggs if a.expr is not None]
-        src = _ensure_parallelism(df) if tier == "object" else df
-        gdf = src.groupingSets(sets_exprs, *[F.col(c) for c in all_cols])
-        wide = gdf.agg(
-            F.grouping_id().alias("__gid"),
-            *[a.expr.alias(a.alias) for a in base])
-        derived = [a for a in tier_aggs if a.derive is not None]
-        # segment values cast JVM-side (same rendering as
-        # _segment_json_col / _sketch_long) so boolean/float keys don't
-        # diverge from the narrow path when stringified in python
-        sel = (
-            [F.col("__gid")]
-            + [F.coalesce(F.col(c).cast(T.StringType()),
-                          F.lit(_NULL_SENTINEL)).alias(c)
-               for c in all_cols]
-            + [F.col(a.alias) for a in base if a.emit]
-            + [a.derive(F.col(a.derive_from)).alias(a.alias)
-               for a in derived]
-        )
-        rows = wide.select(*sel).limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
-        if len(rows) > _SEGMENT_COLLECT_LIMIT:
-            raise ValueError(
-                "profile_partitions: too many segments to collect; "
-                "profile each partition separately")
-        return tier_aggs, rows
+    def label(rd):
+        pname, cols = part_of_gid[rd["__gid"]]
+        return pname, _segment_json_py(cols, [rd[c] for c in cols]), None
 
+    results = run_concurrently(spark, [
+        partial(_run_tier, df, tier_aggs,
+                lambda d, e: d.groupingSets(
+                    sets_exprs, *[F.col(c) for c in all_cols])
+                .agg(F.grouping_id().alias("__gid"), *e),
+                # segment values cast JVM-side (same rendering as
+                # _segment_json_col / _sketch_long) so boolean/float keys
+                # don't diverge from the narrow path when stringified in
+                # python
+                [F.col("__gid")] + [
+                    F.coalesce(F.col(c).cast(T.StringType()),
+                               F.lit(_NULL_SENTINEL)).alias(c)
+                    for c in all_cols],
+                label, _SEGMENT_COLLECT_LIMIT)
+        for _, tier_aggs in _by_tier(aggs)])
+    if any(res is None for res in results):
+        raise ValueError(
+            "profile_partitions: too many segments to collect; "
+            "profile each partition separately")
     rows_by_part: Dict[str, List[tuple]] = {p: [] for p, _ in part_items}
-    results = run_concurrently(
-        spark, [partial(run_tier, *item) for item in _by_tier(aggs)])
-    for tier_aggs, rows in results:
-        for r in rows:
-            rd = r.asDict()
-            for pname, cols in part_items:
-                if gid_for_part[pname] == rd["__gid"]:
-                    seg = _segment_json_py(cols, [rd[c] for c in cols])
-                    rows_by_part[pname].extend(
-                        _slot_rows(seg, tier_aggs, rd))
+    for res in results:
+        for pname, rows in res.items():
+            rows_by_part[pname].extend(rows)
 
     out: Dict[str, ProfileView] = {}
     for pname, cols in part_items:
@@ -682,42 +687,24 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
         raise ValueError(
             "profile table must carry a 'src' column identifying the "
             "source profile of each row (merge_profiles adds it)")
-    # --- JVM mergeable: HLL union
+    # --- JVM mergeable: HLL union, finished as the planner finishes a
+    # column's sketch (same estimate, same mode-aware bounds)
     hll = allp.filter(
         (F.col("metric") == "cardinality") & (F.col("component") == "hll"))
-    import math as _math
-
     union = hll.groupBy("segment", "column", "metric").agg(
         F.hll_union_agg(F.col("b"), F.lit(True)).alias("hb"))
-    est = F.hll_sketch_estimate(F.col("hb"))
-    rse = 2.0 * 1.04 / _math.sqrt(2.0 ** cfg.hll_lg_k)
-    nl = F.lit(None)
+    hb = F.col("hb")
     hll_rows = union.select(
         "segment", "column", "metric",
-        F.explode(
-            F.array(
-                F.struct(F.lit("hll").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         nl.cast(T.DoubleType()).alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         F.col("hb").alias("b")),
-                F.struct(F.lit("est").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         est.alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         nl.cast(T.BinaryType()).alias("b")),
-                F.struct(F.lit("lower").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         (est * F.lit(1.0 - rse)).alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         nl.cast(T.BinaryType()).alias("b")),
-                F.struct(F.lit("upper").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         (est * F.lit(1.0 + rse)).alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         nl.cast(T.BinaryType()).alias("b")),
-            )
-        ).alias("r"),
+        F.explode(F.array(*[
+            F.struct(F.lit(comp).alias("component"),
+                     *_slot_fields(slot, value))
+            for comp, slot, value in (
+                ("hll", SLOT_B, hb),
+                ("est", SLOT_D, _hll_estimate(1.0)(hb)),
+                ("lower", SLOT_D, _hll_bounds(2.0, upper=False)(hb)),
+                ("upper", SLOT_D, _hll_bounds(2.0, upper=True)(hb)))
+        ])).alias("r"),
     ).select("segment", "column", "metric", "r.*")
 
     # ALL rows (cardinality included) flow to the grouped merge below:
@@ -727,10 +714,6 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
     # configs don't silently lose the metric
     rest = allp
 
-    quantiles = list(cfg.quantiles)
-    kll_k = cfg.effective_kll_k
-    fi_cap = cfg.fi_capacity
-    fi_maxlen = cfg.max_frequent_item_size
     # snapshot the custom-metric merge ops DRIVER-side: the registry is a
     # driver-process dict, invisible to executor python workers — the
     # closure must carry the ops, not re-import them
@@ -806,13 +789,8 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
                 emit("max", d=float(maxs["d"].max()))
             kll = by_comp.get("kll")
             if kll is not None:
-                sk = KllSketch(kll_k)
-                for blob in kll["b"]:
-                    if blob is not None:
-                        sk.merge(KllSketch.deserialize(bytes(blob)))
-                emit("kll", b=sk.serialize())
-                for q, v in zip(quantiles, sk.quantiles(quantiles)):
-                    emit(_q_name(q), d=float(v))
+                for r in _finish_sketch("kll", kll["b"], cfg):
+                    emit(*r)
             else:
                 # quantile_impl='native' profiles carry per-quantile
                 # values but no mergeable sketch: merged quantile =
@@ -848,16 +826,8 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
         elif metric == "frequent_items":
             mg = by_comp.get("mg")
             if mg is not None:
-                sk = FrequentStringsSketch(fi_cap, fi_maxlen)
-                for blob in mg["b"]:
-                    if blob is not None:
-                        sk.merge(FrequentStringsSketch.deserialize(bytes(blob)))
-                emit("mg", b=sk.serialize())
-                items = [
-                    {"value": v, "est": e, "lower": lo, "upper": hi}
-                    for v, e, lo, hi in sk.top_k(32)
-                ]
-                emit("items", s=json.dumps(items, ensure_ascii=False))
+                for r in _finish_sketch("mg", mg["b"], cfg):
+                    emit(*r)
         else:
             # custom metrics merge by their registered per-component op
             # (reference: pluggable component aggregators,

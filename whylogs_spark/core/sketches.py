@@ -403,18 +403,3 @@ class FrequentStringsSketch:
         sk.counts = {str(k): int(v) for k, v in payload["c"].items()}
         return sk
 
-
-def merge_kll_blobs(blobs: Iterable[Optional[bytes]]) -> bytes:
-    acc = KllSketch()
-    for b in blobs:
-        if b:
-            acc.merge(KllSketch.deserialize(b))
-    return acc.serialize()
-
-
-def merge_fi_blobs(blobs: Iterable[Optional[bytes]]) -> bytes:
-    acc = FrequentStringsSketch()
-    for b in blobs:
-        if b:
-            acc.merge(FrequentStringsSketch.deserialize(b))
-    return acc.serialize()
