@@ -115,23 +115,11 @@ def main() -> None:
             "no exchange of raw vectors": r"^(?![\s\S]*Exchange hashpartitioning\(embedding)",
         }))
 
-    # 5. minhash signatures (sql impl): explode + partial hash agg,
-    # no raw-text shuffle
-    sigs = dedup.minhash_signatures(docs, num_hashes=16, impl="sql")
-    sections.append((
-        "minhash signatures (sql impl)", sigs,
-        {
-            "map-side partial aggregation of signature mins":
-                r"HashAggregate[\s\S]*Exchange[\s\S]*HashAggregate",
-            "declarative HashAggregate (codegen), not interpreted Object agg":
-                r"^(?![\s\S]*ObjectHashAggregate)",
-        }))
-
-    # 5b. minhash signatures (arrow impl, default): one vectorized pass,
-    # signatures computed where the docs live — no shuffle at all
+    # 5. minhash signatures: one vectorized pass, signatures computed
+    # where the docs live — no shuffle at all
     sigs_a = dedup.minhash_signatures(docs, num_hashes=16)
     sections.append((
-        "minhash signatures (arrow impl)", sigs_a,
+        "minhash signatures", sigs_a,
         {
             "single Arrow pass (MapInArrow)": r"MapInArrow|ArrowEvalPython",
             "no shuffle of documents":

@@ -43,7 +43,6 @@ SLOW_TESTS = {
     "test_quality.py::test_bigram_lm_matches_python_model",
     "test_profile_basic.py::test_histogram_from_kll",
     "test_incremental_dedup.py::test_incremental_minhash_greedy_not_closure",
-    "test_ops.py::test_simhash[sql]",
     "test_behavioral.py::test_retention_cohorts_day_grain",
     "test_bpe.py::test_train_and_tokenize_roundtrip",
     "test_outliers_bins.py::test_quantile_bins_quartiles",
@@ -140,7 +139,6 @@ SLOW_TESTS = {
     "test_custom_metrics.py::test_custom_metric_merge_monoid",
     "test_incremental_dedup.py::test_incremental_minhash_accepts_persisted_index",
     "test_incremental_dedup.py::test_incremental_minhash_ground_truth",
-    "test_incremental_dedup.py::test_minhash_index_sql_impl_agrees_on_pairs",
     "test_ops.py::test_sessionize_hot_user_buckets_equivalent",
     "test_relations_ranking.py::test_pr_auc_exact_edges",
     "test_streaming.py::test_stateful_streaming_sessionize",

@@ -49,11 +49,10 @@ def test_minhash_detects_near_dups(spark):
 
 
 def test_minhash_dedup_precollapse_and_reuse_parity(spark):
-    """Exact-duplicate pre-collapse + reuse_signatures must both keep
-    the survivor set identical to plain min-id single-link semantics:
-    replicas of a text collapse to the group min id, chains still close
-    transitively through the representative, and null texts are mutual
-    duplicates."""
+    """Exact-duplicate pre-collapse must keep the survivor set identical
+    to plain min-id single-link semantics: replicas of a text collapse
+    to the group min id, chains still close transitively through the
+    representative, and null texts are mutual duplicates."""
     base = "the quick brown fox jumps over the lazy dog once more " * 5
     near = base.replace("lazy", "sleepy")
     other = "completely unrelated text about spark planner internals " * 6
@@ -62,12 +61,9 @@ def test_minhash_dedup_precollapse_and_reuse_parity(spark):
             (6, base), (7, other), (8, base)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # 2/6/8 cluster with 1; 7 clusters with 3; 5 with 4 (null group)
-    expect = {1, 3, 4}
-    for reuse in (False, True):
-        kept = {r["doc_id"] for r in dedup.minhash_dedup(
-            df, jaccard_threshold=0.3,
-            reuse_signatures=reuse).collect()}
-        assert kept == expect, (reuse, kept)
+    kept = {r["doc_id"] for r in dedup.minhash_dedup(
+        df, jaccard_threshold=0.3).collect()}
+    assert kept == {1, 3, 4}
 
 
 def test_minhash_jaccard_close_to_exact(spark):
@@ -193,15 +189,14 @@ def test_embedding_outliers_dropped_bucket_flag(spark):
     assert len(out3) == 30
 
 
-@pytest.mark.parametrize("impl", ["arrow", "sql"])
-def test_simhash(spark, impl):
+def test_simhash(spark):
     df = spark.createDataFrame(
         [(1, "spark is a distributed engine for big data"),
          (2, "spark is a distributed engine for huge data"),
          (3, "bananas oranges apples pears grapes melons kiwi")],
         ["doc_id", "text"],
     )
-    sigs = dedup.simhash_signatures(df, impl=impl)
+    sigs = dedup.simhash_signatures(df)
     rows = {r["doc_id"]: r["simhash"] for r in sigs.collect()}
     d12 = sigs.filter("doc_id=1").select(
         dedup.simhash_hamming(F.lit(rows[1]), F.lit(rows[2])).alias("h")
@@ -221,6 +216,27 @@ def test_cosine_topk_matches_numpy(embeddings):
     out = similarity.cosine_topk(embeddings, list(q), k=5).collect()
     assert {r["vec_id"] for r in out} == top_true
     assert out[0]["cosine"] == pytest.approx(1.0)
+
+
+def test_cosine_topk_ranks_undefined_cosine_last(spark):
+    """A null or zero vector has no cosine: it comes back NULL and ranks
+    after every scored row, even a negative one (ties by id)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [-1.0, 0.0]), (3, None), (4, [0.0, 0.0]),
+         (5, [-1.0, -0.1])], "vec_id long, embedding array<double>")
+    out = similarity.cosine_topk(df, [1.0, 0.0], k=4).collect()
+    assert [r["vec_id"] for r in out] == [1, 5, 2, 3]
+    assert out[1]["cosine"] == pytest.approx(-1.0 / np.sqrt(1.01))
+    assert out[3]["cosine"] is None
+    # the same answer cosine_similarity gives, sorted the same way
+    ref = df.select("vec_id", similarity.cosine_similarity(
+        F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0))).alias("c")) \
+        .orderBy(F.col("c").desc(), "vec_id").limit(4).collect()
+    assert [r["vec_id"] for r in ref] == [1, 5, 2, 3]
+    # a zero query scores nothing
+    zero = similarity.cosine_topk(df, [0.0, 0.0], k=5).collect()
+    assert [r["vec_id"] for r in zero] == [1, 2, 3, 4, 5]
+    assert all(r["cosine"] is None for r in zero)
 
 
 def test_lsh_topk_recall(embeddings):
@@ -295,15 +311,6 @@ def test_fingerprint_normalization(spark):
     fps = {r["doc_id"]: r["fingerprint"]
            for r in text.with_fingerprint(df).collect()}
     assert fps[1] == fps[2] != fps[3]
-
-
-def test_cosine_topk_arrow_matches_sql(embeddings):
-    q = [float(i % 7) for i in range(64)]
-    a = similarity.cosine_topk(embeddings, q, k=10, impl="sql").collect()
-    b = similarity.cosine_topk(embeddings, q, k=10, impl="arrow").collect()
-    assert [r["vec_id"] for r in a] == [r["vec_id"] for r in b]
-    for x, y in zip(a, b):
-        assert x["cosine"] == pytest.approx(y["cosine"], rel=1e-12)
 
 
 def test_bpe_token_count(spark):

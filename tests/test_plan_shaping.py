@@ -1,7 +1,7 @@
 """Plan shaping in ``core.util``: adaptive ensure_parallelism width,
 the ``checkpoint`` lineage-cut policy (derived profile inputs,
-IRLS-style iteration bases), and ``run_concurrently``'s job-tag
-inheritance and failure reporting."""
+IRLS-style iteration bases, the MinHash pair index), and
+``run_concurrently``'s job-tag inheritance and failure reporting."""
 
 import re
 import time
@@ -151,6 +151,32 @@ def test_irls_fits_unchanged_by_base_cut(spark, orders):
     p1 = fit_poisson(df, "yc", ["x"])
     assert p1["n"] == m1["n"]
     assert p1["converged"]
+
+
+def test_minhash_lsh_pairs_reads_one_materialized_index(spark):
+    """The banding side and both verify joins of ``minhash_lsh_pairs``
+    read one checkpointed MinHash index, so the kernel runs once and the
+    optimized plan holds no Arrow pass. With cuts off, the same one
+    kernel (signatures and shingles together) appears at each read."""
+    from whylogs_spark.ops import dedup
+
+    df = spark.createDataFrame(
+        [(i, f"doc {i % 5} about near duplicate text number {i}")
+         for i in range(40)], "doc_id long, text string")
+
+    def arrow_passes(d):
+        plan = d._jdf.queryExecution().optimizedPlan().toString()
+        return [re.sub(r"#\d+L?", "", m)
+                for m in re.findall(r"MapInArrow[^\n]*", plan)]
+
+    assert arrow_passes(dedup.minhash_lsh_pairs(df)) == []
+    spark.conf.set("spark.whylogs.cutLineage", "false")
+    try:
+        uncut = arrow_passes(dedup.minhash_lsh_pairs(df))
+    finally:
+        spark.conf.unset("spark.whylogs.cutLineage")
+    assert len(uncut) == 3 and len(set(uncut)) == 1, uncut
+    assert "minhash_sig" in uncut[0] and "shingles" in uncut[0]
 
 
 def _jobs_newest_first(spark):

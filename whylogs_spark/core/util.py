@@ -37,8 +37,9 @@ spent 52 s collecting serialized broadcast rebuilds in one cold run.
   fired on a crossJoin-replicated 6M-row frame, ``profile_scale_10x``
   took 37x the task-seconds (50 -> 1855).  An unknown estimate counts
   as unbounded.  ``bounded=True`` skips the size check for inputs
-  bounded by contract (the incremental-dedup batch index is strictly
-  smaller than the batch text it summarizes).
+  bounded by contract: linear in a scanned input and never replicated
+  (the MinHash index holds a fixed-width signature and one hash per
+  distinct gram of each document).
 * ``spark.whylogs.cutLineage=false`` turns every cut off for the
   session.  The plan audit (``scripts/explain_audit.py``) uses it:
   ``explain()`` below a cut shows only ``Scan ExistingRDD``, so the

@@ -7,12 +7,13 @@ All variants are expressed as declarative DataFrame plans:
   key, skew only if the corpus is mostly one document).
 * ``minhash_signatures`` / ``minhash_lsh_pairs`` / ``minhash_dedup`` —
   MinHash + LSH banding (Broder 1997; Leskovec et al., "Mining of Massive
-  Datasets" ch.3). Signatures are computed WITHOUT exploding shingles:
-  ``array_min(transform(shingles, xxhash64(concat(s, seed))))`` keeps the
-  whole signature computation inside whole-stage codegen. Only band keys
-  (docs × bands rows, each a few bytes) are shuffled — never shingle sets.
-* ``simhash_signatures`` — 64-bit SimHash (Charikar 2002) via bit-vote
-  aggregation over token hashes, again with higher-order functions.
+  Datasets" ch.3). One shuffle-free Arrow pass (``_minhash_pass``)
+  hashes the word n-grams and evaluates the permutation family as a
+  numpy matrix; shingle sets, signatures and the near-dup index are its
+  projections. Only band keys (docs × bands rows, each a few bytes) are
+  shuffled — never shingle sets.
+* ``simhash_signatures`` — 64-bit SimHash (Charikar 2002): bit votes
+  over md5 token hashes, one Arrow pass.
 * ``ngram_jaccard_pairs`` — exact n-gram Jaccard verification for a
   candidate pair set (used as the verify stage after LSH).
 """
@@ -28,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from whylogs_spark.core.util import ensure_parallelism
+from whylogs_spark.core.util import checkpoint, ensure_parallelism
 
 from ._tokens import let, ngrams, windows
 
@@ -148,39 +149,77 @@ def hashed_word_shingles(
     return let(F.split(normalized_text(c), " "), grams)
 
 
-def shingle_hash_sets(
+def _minhash_pass(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_words: int = 3,
+    text_col: str,
+    id_col: str,
+    shingle_words: int,
+    num_hashes: Optional[int] = None,
+    shingles: bool = True,
 ) -> DataFrame:
-    """(id, shingles: array<long>) — sorted distinct word-n-gram hashes,
-    computed Arrow-vectorized (see ``_token_gram_hashes``). Basis for
-    exact-Jaccard verification; same gram definition as the signatures."""
+    """The one MinHash kernel: ``(id[, minhash_sig][, shingles])`` in
+    one shuffle-free Arrow pass, computed where the docs live.
+
+    blake2b hashes each token once and numpy combines the word-n-gram
+    hashes (``_token_gram_hashes``). With ``num_hashes`` the seeded
+    ``a_i*g + b_i`` (mod 2^64, a_i odd) permutation family runs as one
+    (num_hashes x grams) matrix with a single ``minimum.reduceat`` per
+    batch; ``shingles`` are the sorted distinct gram hashes.
+    :func:`shingle_hash_sets`, :func:`minhash_signatures` and
+    :func:`minhash_index` are its three projections, so signatures and
+    shingle sets always agree on the gram definition."""
     n = shingle_words
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [id_field, T.StructField("shingles", T.ArrayType(T.LongType()))])
+    rng = np.random.RandomState(0xD5)
+    k = num_hashes or 0
+    perm_a = (rng.randint(1, 2 ** 62, size=k, dtype=np.uint64)
+              * np.uint64(2) + np.uint64(1))
+    perm_b = rng.randint(0, 2 ** 63, size=k, dtype=np.uint64)
+    longs = T.ArrayType(T.LongType())
+    fields = [df.schema[id_col]]
+    if num_hashes is not None:
+        fields.append(T.StructField("minhash_sig", longs))
+    if shingles:
+        fields.append(T.StructField("shingles", longs))
+    out_schema = T.StructType(fields)
+    names = out_schema.fieldNames()
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         np.seterr(over="ignore")
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             texts = tbl.column(text_col).to_pylist()
-            grams = [
-                pa.array(_token_gram_hashes(t, n).astype(np.int64))
-                for t in texts
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(id_col).combine_chunks(),
-                 pa.ListArray.from_arrays(
-                     np.cumsum([0] + [len(g) for g in grams]),
-                     pa.concat_arrays(grams) if grams else
-                     pa.array([], pa.int64()))],
-                names=[id_col, "shingles"])
+            if not texts:
+                continue
+            # every doc has >= 1 gram (a short doc hashes as one gram)
+            grams = [_token_gram_hashes(t, n) for t in texts]
+            offsets = np.cumsum([0] + [g.size for g in grams],
+                                dtype=np.int32)
+            allg = np.concatenate(grams)
+            cols = [tbl.column(id_col).combine_chunks()]
+            if num_hashes is not None:
+                perm = perm_a[:, None] * allg[None, :] + perm_b[:, None]
+                mins = np.minimum.reduceat(perm, offsets[:-1], axis=1)
+                cols.append(pa.ListArray.from_arrays(
+                    np.arange(len(texts) + 1, dtype=np.int32) * k,
+                    pa.array(mins.T.astype(np.int64).ravel())))
+            if shingles:
+                cols.append(pa.ListArray.from_arrays(
+                    offsets, pa.array(allg.astype(np.int64))))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
         gen, out_schema)
+
+
+def shingle_hash_sets(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_words: int = 3,
+) -> DataFrame:
+    """(id, shingles: array<long>) — sorted distinct word-n-gram hashes
+    (:func:`_minhash_pass`). Basis for exact-Jaccard verification."""
+    return _minhash_pass(df, text_col, id_col, shingle_words)
 
 
 def minhash_signatures(
@@ -189,73 +228,10 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_words: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(id, minhash_sig: array<long>[num_hashes]).
-
-    impl="arrow" (default): one Arrow pass — blake2b token hashes, numpy
-    gram combine, the num_hashes permutations (a_i*g + b_i over uint64)
-    evaluated as one (num_hashes × grams) matrix with a single
-    ``minimum.reduceat`` per batch. No shuffle at all: signatures are
-    computed where the docs live. ~4x faster than the SQL path, whose
-    higher-order array lambdas Spark evaluates interpreted (outside
-    whole-stage codegen).
-
-    impl="sql": pure-JVM fallback — explode shingle hashes then
-    hash-aggregate ``min(xxhash64(h, i))`` per id; map-side partial
-    aggregation keeps the shuffle at one signature row per doc.
-    """
-    if impl == "sql":
-        ex = ensure_parallelism(df).select(
-            F.col(id_col),
-            F.explode(
-                hashed_word_shingles(F.col(text_col), shingle_words)
-            ).alias("__h"),
-        )
-        agg = ex.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64("__h", F.lit(i))).alias(f"__m{i}")
-                for i in range(num_hashes)
-            ]
-        )
-        return agg.select(
-            F.col(id_col),
-            F.array(*[f"__m{i}" for i in range(num_hashes)]).alias(
-                "minhash_sig"),
-        )
-
-    n = shingle_words
-    rng = np.random.RandomState(0xD5)
-    perm_a = (rng.randint(1, 2 ** 62, size=num_hashes, dtype=np.uint64)
-              * np.uint64(2) + np.uint64(1))
-    perm_b = rng.randint(0, 2 ** 63, size=num_hashes, dtype=np.uint64)
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [id_field, T.StructField("minhash_sig", T.ArrayType(T.LongType()))])
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        np.seterr(over="ignore")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            texts = tbl.column(text_col).to_pylist()
-            if not texts:
-                continue
-            gram_chunks = [_token_gram_hashes(t, n) for t in texts]
-            starts = np.cumsum([0] + [g.size for g in gram_chunks])[:-1]
-            allg = np.concatenate(gram_chunks)
-            # (num_hashes, total_grams) permuted matrix; per-doc min via
-            # one reduceat — all wraparound uint64 arithmetic
-            perm = perm_a[:, None] * allg[None, :] + perm_b[:, None]
-            mins = np.minimum.reduceat(perm, starts, axis=1)
-            sigs = mins.astype(np.int64).T
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(id_col).combine_chunks(),
-                 pa.array([row.tolist() for row in sigs],
-                          pa.list_(pa.int64()))],
-                names=[id_col, "minhash_sig"])
-
-    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-        gen, out_schema)
+    """(id, minhash_sig: array<long>[num_hashes]) (:func:`_minhash_pass`)."""
+    return _minhash_pass(df, text_col, id_col, shingle_words, num_hashes,
+                         shingles=False)
 
 
 def minhash_index(
@@ -264,77 +240,15 @@ def minhash_index(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_words: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, minhash_sig: array<long>, shingles: array<long>) — the
     persistable near-dup INDEX: everything the LSH pair machinery needs
     (band keys derive from the signature in-plan; exact-Jaccard verify
     reads the shingle sets), with the raw text left behind. Write this
     to Parquet once per ingested corpus and incremental runs never
-    touch history text again.
-
-    impl="arrow" (default): ONE Arrow pass computes both — the gram
-    hashes are shared between the signature permutations and the
-    shingle sets (halves the tokenize+hash work vs running
-    ``minhash_signatures`` and ``shingle_hash_sets`` separately).
-    impl="sql": pure-JVM — ``hashed_word_shingles`` plus an in-plan
-    ``array_min(transform(...))`` per permutation; identical values to
-    the explode/groupBy formulation, zero shuffle.
-    """
-    if impl == "sql":
-        sh = hashed_word_shingles(F.col(text_col), shingle_words)
-        out = ensure_parallelism(df).select(
-            F.col(id_col), sh.alias("shingles"))
-        # NB: the transform lambda must be ARITY 1 — PySpark treats a
-        # two-parameter lambda as (element, array_index) and would
-        # shadow the permutation index with the element position
-        sig = F.array(*[
-            F.array_min(F.transform(
-                F.col("shingles"),
-                (lambda ii: lambda h: F.xxhash64(h, F.lit(ii)))(i)))
-            for i in range(num_hashes)
-        ])
-        return out.select(id_col, sig.alias("minhash_sig"), "shingles")
-
-    n = shingle_words
-    rng = np.random.RandomState(0xD5)
-    perm_a = (rng.randint(1, 2 ** 62, size=num_hashes, dtype=np.uint64)
-              * np.uint64(2) + np.uint64(1))
-    perm_b = rng.randint(0, 2 ** 63, size=num_hashes, dtype=np.uint64)
-    id_field = df.schema[id_col]
-    out_schema = T.StructType([
-        id_field,
-        T.StructField("minhash_sig", T.ArrayType(T.LongType())),
-        T.StructField("shingles", T.ArrayType(T.LongType())),
-    ])
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        np.seterr(over="ignore")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            texts = tbl.column(text_col).to_pylist()
-            if not texts:
-                continue
-            gram_chunks = [_token_gram_hashes(t, n) for t in texts]
-            starts = np.cumsum([0] + [g.size for g in gram_chunks])[:-1]
-            allg = np.concatenate(gram_chunks)
-            perm = perm_a[:, None] * allg[None, :] + perm_b[:, None]
-            mins = np.minimum.reduceat(perm, starts, axis=1)
-            sigs = mins.astype(np.int64).T
-            sh_arrays = [pa.array(g.astype(np.int64))
-                         for g in gram_chunks]
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(id_col).combine_chunks(),
-                 pa.array([row.tolist() for row in sigs],
-                          pa.list_(pa.int64())),
-                 pa.ListArray.from_arrays(
-                     np.cumsum([0] + [len(g) for g in gram_chunks]),
-                     pa.concat_arrays(sh_arrays) if sh_arrays else
-                     pa.array([], pa.int64()))],
-                names=[id_col, "minhash_sig", "shingles"])
-
-    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-        gen, out_schema)
+    touch history text again. One :func:`_minhash_pass` computes both
+    columns from the same gram hashes."""
+    return _minhash_pass(df, text_col, id_col, shingle_words, num_hashes)
 
 
 def _band_structs(num_hashes: int, bands: int,
@@ -366,36 +280,16 @@ def lsh_pairs_from_index(
     jaccard_threshold: float = 0.5,
     max_bucket: int = 2048,
 ) -> DataFrame:
-    """Verified near-dup pairs from a :func:`minhash_index` frame —
-    the banding + in-bucket expansion + exact-Jaccard verify core of
-    ``minhash_lsh_pairs``, reusable against a PERSISTED index (no
-    re-tokenization of the corpus). The banding side reads only the
-    signature column and the verify side only the shingle column, so a
-    Parquet-backed index scans each column once, pruned.
+    """Verified near-dup pairs from a :func:`minhash_index` frame:
+    banding, in-bucket pair expansion and exact-Jaccard verify. The
+    banding side reads only the signature column and the verify side
+    only the shingle column, so a Parquet-backed index scans each
+    column once, pruned; a computed index should be materialized first
+    (:func:`minhash_lsh_pairs` does), since it is read three times.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    return _lsh_verified_pairs(idx, idx, id_col, num_hashes, bands,
-                               jaccard_threshold, max_bucket)
-
-
-def _lsh_verified_pairs(
-    sig_df: DataFrame,
-    shingle_df: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    jaccard_threshold: float,
-    max_bucket: int = 2048,
-) -> DataFrame:
-    """Band `sig_df` (needs ``minhash_sig``), expand in-bucket pairs,
-    verify exact Jaccard against `shingle_df` (needs ``shingles``).
-    Taking the two inputs separately lets the one-shot path feed the
-    cheap signature-only / shingle-only Arrow passes instead of
-    evaluating a combined index pass twice (the banding side would
-    materialize every shingle list it never reads, and the verify side
-    would recompute the full permutation matrix)."""
-    banded = sig_df.select(
+    banded = idx.select(
         F.col(id_col).alias("__id"),
         F.explode(_band_structs(num_hashes, bands)).alias("bb"),
     ).select("__id", "bb.band", "bb.bucket")
@@ -426,8 +320,8 @@ def _lsh_verified_pairs(
         .distinct()
     )
 
-    shingled = shingle_df.select(F.col(id_col).alias("__id"),
-                                 F.col("shingles").alias("__sh"))
+    shingled = idx.select(F.col(id_col).alias("__id"),
+                          F.col("shingles").alias("__sh"))
     return (
         pairs.join(
             shingled.withColumnRenamed("__id", "id_a")
@@ -457,7 +351,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding + exact verify.
 
@@ -466,27 +359,18 @@ def minhash_lsh_pairs(
     pair set joins back to shingle sets for exact Jaccard — the join is on
     ids, broadcast-able when candidates are few.
 
-    Signatures for banding and shingle sets for the verify join are
-    computed by SEPARATE single-purpose Arrow passes
-    (:func:`minhash_signatures` / :func:`shingle_hash_sets`) — measured
-    faster than evaluating a combined :func:`minhash_index` pass on both
-    sides of the pair machinery, since each side then carries only the
-    column it consumes. Persisted-index runs use
-    :func:`lsh_pairs_from_index` instead.
+    The corpus is tokenized once: one :func:`minhash_index` pass is
+    materialized (``checkpoint``; the index is linear in the corpus)
+    and :func:`lsh_pairs_from_index` reads it for the banding side and
+    both verify joins.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    sig = minhash_signatures(df, text_col, id_col, num_hashes,
-                             shingle_words, impl)
-    if impl == "sql":
-        sh = ensure_parallelism(df).select(
-            F.col(id_col),
-            hashed_word_shingles(F.col(text_col), shingle_words)
-            .alias("shingles"))
-    else:
-        sh = shingle_hash_sets(df, text_col, id_col, shingle_words)
-    return _lsh_verified_pairs(sig, sh, id_col, num_hashes, bands,
-                               jaccard_threshold)
+    idx = checkpoint(minhash_index(df, text_col, id_col, num_hashes,
+                                   shingle_words),
+                     derived=True, bounded=True)
+    return lsh_pairs_from_index(idx, id_col, num_hashes, bands,
+                                jaccard_threshold)
 
 
 def connected_components(
@@ -591,8 +475,6 @@ def minhash_dedup(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.8,
-    impl: str = "arrow",
-    reuse_signatures: bool = False,
 ) -> DataFrame:
     """Drop near-duplicates: single-link clusters of verified pairs
     collapse to their minimum-id survivor.
@@ -621,17 +503,6 @@ def minhash_dedup(
     copies survive; the collapsed path always merges exact
     duplicates, so it dedups strictly MORE in that case (the
     behavior users want, but not bit-identical to pre-collapse).
-
-    ``reuse_signatures=True`` computes ONE combined
-    :func:`minhash_index` pass (gram hashes shared between signature
-    permutations and shingle sets) and ``persist()``s it across the
-    banding pass and the two verify-join branches — 3 corpus
-    tokenizations become 1. Identical output; opt-in because the cached
-    index holds the corpus's signatures + shingle sets in executor
-    memory (fine whenever the corpus fits the cluster's storage
-    fraction; the default streams instead).  The cache is released
-    before returning — the closure materializes the edge list eagerly,
-    so the returned anti-join plan no longer references it.
     """
     # exact pre-collapse: (id -> group rep) map + distinct-text corpus.
     # Null texts share a sentinel key (an equi-join would drop null
@@ -641,11 +512,9 @@ def minhash_dedup(
         F.col(id_col),
         F.coalesce(F.md5(F.col(text_col)),
                    F.lit("__null_text__")).alias("__tkey"))
-    # checkpoint the (tkey, rep) table: THREE downstream branches
-    # (banding signatures + two verify joins) consume `uniq`, and
-    # without the cut each would re-run the corpus-wide md5 groupBy —
-    # measured as a 2x task-second regression on low-duplication
-    # corpora where the collapse itself wins nothing
+    # checkpoint the (tkey, rep) table: the winner count, the `uniq`
+    # semi-join and the final id->rep join all read it, and without
+    # the cut each would re-run the corpus-wide md5 groupBy
     rep = keyed.groupBy("__tkey").agg(F.min(id_col).alias("__rep")) \
         .localCheckpoint()
     id_to_rep = keyed.join(rep, "__tkey").select(id_col, "__rep")
@@ -661,24 +530,9 @@ def minhash_dedup(
         winners = F.broadcast(winners)
     uniq = df.join(winners, id_col, "left_semi")
 
-    if reuse_signatures:
-        idx = minhash_index(uniq, text_col, id_col, num_hashes,
-                            shingle_words, impl).persist()
-        try:
-            pairs = _lsh_verified_pairs(
-                idx, idx, id_col, num_hashes, bands,
-                jaccard_threshold)
-            # connected_components localCheckpoints the edge list
-            # EAGERLY, so every idx-dependent job has run by the time
-            # it returns and the unpersist below is safe
-            comp = connected_components(pairs, "id_a", "id_b")
-        finally:
-            idx.unpersist()
-    else:
-        pairs = minhash_lsh_pairs(
-            uniq, text_col, id_col, num_hashes, bands, shingle_words,
-            jaccard_threshold, impl)
-        comp = connected_components(pairs, "id_a", "id_b")
+    pairs = minhash_lsh_pairs(uniq, text_col, id_col, num_hashes, bands,
+                              shingle_words, jaccard_threshold)
+    comp = connected_components(pairs, "id_a", "id_b")
     # survivor iff id == final cluster winner: the rep's component
     # label when the rep joined any verified pair, else the rep itself.
     # rep = min id of its exact-dup group and component = min rep, so
@@ -880,8 +734,6 @@ def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, simhash: long) — 64-bit SimHash over whitespace tokens.
 
@@ -893,101 +745,53 @@ def simhash_signatures(
     bit-for-bit outside Spark (the correctness gate recomputes them in
     pure SQL; see ``__spark_entry__`` simhash oracles).
 
-    impl="arrow" (default): one shuffle-free Arrow pass — C-speed md5
-    token hashes, the 64 bit-votes evaluated as one (bits × tokens)
-    matrix with a single ``add.reduceat`` per batch.
-
-    impl="sql": pure-JVM explode + hash-aggregate of 64 conditional sums
-    (map-side combine; shuffle = docs x 8 bytes); the token-hash
-    ``transform`` lambda evaluates interpreted, so this is slower.
+    One shuffle-free Arrow pass: C-speed md5 token hashes, the 64
+    bit-votes evaluated as one (64 x tokens) matrix with a single
+    ``add.reduceat`` per batch.
     """
-    if impl == "arrow":
-        if bits != 64:
-            raise ValueError("arrow simhash supports bits=64")
-        id_field = df.schema[id_col]
-        out_schema = T.StructType(
-            [id_field, T.StructField("simhash", T.LongType())])
+    id_field = df.schema[id_col]
+    out_schema = T.StructType(
+        [id_field, T.StructField("simhash", T.LongType())])
 
-        def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import hashlib
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import hashlib
 
-            np.seterr(over="ignore")
-            shifts = np.arange(64, dtype=np.uint64)
-            for batch in batches:
-                tbl = pa.Table.from_batches([batch])
-                texts = tbl.column(text_col).to_pylist()
-                if not texts:
-                    continue
-                tok_chunks = []
-                for t in texts:
-                    toks = " ".join((t or "").lower().split()).split(" ")
-                    tok_chunks.append(np.frombuffer(
-                        b"".join(
-                            hashlib.md5(
-                                s.encode("utf-8", "surrogatepass")
-                            ).digest()[:8]
-                            for s in toks),
-                        dtype=">u8").astype(np.uint64))
-                starts = np.cumsum(
-                    [0] + [c.size for c in tok_chunks])[:-1]
-                allh = np.concatenate(tok_chunks)
-                counts = np.array([c.size for c in tok_chunks])
-                # (64, tokens) 0/1 matrix; per-doc ones via one reduceat
-                bitmat = ((allh[None, :] >> shifts[:, None])
-                          & np.uint64(1)).astype(np.int32)
-                ones = np.add.reduceat(bitmat, starts, axis=1)
-                set_bits = (2 * ones) > counts[None, :]   # vote > 0
-                sig = np.zeros(len(texts), dtype=np.uint64)
-                for b in range(64):
-                    sig |= set_bits[b].astype(np.uint64) << np.uint64(b)
-                yield pa.RecordBatch.from_arrays(
-                    [tbl.column(id_col).combine_chunks(),
-                     pa.array(sig.astype(np.int64))],
-                    names=[id_col, "simhash"])
+        np.seterr(over="ignore")
+        shifts = np.arange(64, dtype=np.uint64)
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            texts = tbl.column(text_col).to_pylist()
+            if not texts:
+                continue
+            tok_chunks = []
+            for t in texts:
+                toks = " ".join((t or "").lower().split()).split(" ")
+                tok_chunks.append(np.frombuffer(
+                    b"".join(
+                        hashlib.md5(
+                            s.encode("utf-8", "surrogatepass")
+                        ).digest()[:8]
+                        for s in toks),
+                    dtype=">u8").astype(np.uint64))
+            starts = np.cumsum(
+                [0] + [c.size for c in tok_chunks])[:-1]
+            allh = np.concatenate(tok_chunks)
+            counts = np.array([c.size for c in tok_chunks])
+            # (64, tokens) 0/1 matrix; per-doc ones via one reduceat
+            bitmat = ((allh[None, :] >> shifts[:, None])
+                      & np.uint64(1)).astype(np.int32)
+            ones = np.add.reduceat(bitmat, starts, axis=1)
+            set_bits = (2 * ones) > counts[None, :]   # vote > 0
+            sig = np.zeros(len(texts), dtype=np.uint64)
+            for b in range(64):
+                sig |= set_bits[b].astype(np.uint64) << np.uint64(b)
+            yield pa.RecordBatch.from_arrays(
+                [tbl.column(id_col).combine_chunks(),
+                 pa.array(sig.astype(np.int64))],
+                names=[id_col, "simhash"])
 
-        return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-            gen, out_schema)
-
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-
-    def md5_u64(t: Column) -> Column:
-        # first 16 hex chars of md5 as an UNSIGNED 64-bit value, then
-        # two's-complement folded into a signed long (decimal(20,0) holds
-        # the unsigned range) — identical bits to the arrow impl
-        ud = F.conv(F.substring(F.md5(t), 1, 16), 16, 10).cast(
-            T.DecimalType(20, 0))
-        two63 = F.lit(str(2 ** 63)).cast(T.DecimalType(20, 0))
-        two64 = F.lit(str(2 ** 64)).cast(T.DecimalType(21, 0))
-        return (
-            F.when(ud >= two63, (ud.cast(T.DecimalType(21, 0)) - two64))
-            .otherwise(ud)
-            .cast(T.LongType())
-        )
-
-    ex = ensure_parallelism(df).select(
-        F.col(id_col),
-        F.explode(F.transform(toks, md5_u64)).alias("__h"),
-    )
-    votes = ex.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("__h"), b).bitwiseAND(F.lit(1)) == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"__v{b}")
-            for b in range(bits)
-        ]
-    )
-    sig = None
-    for b in range(bits):
-        # two's complement: setting bit 63 of a signed long == adding -2^63
-        bit_val = -(2 ** 63) if b == 63 else 2 ** b
-        bc = F.when(
-            F.col(f"__v{b}") > 0, F.lit(bit_val).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sig = bc if sig is None else sig + bc
-    return votes.select(F.col(id_col), sig.alias("simhash"))
+    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
+        gen, out_schema)
 
 
 def simhash_hamming(a: Column, b: Column) -> Column:
@@ -1064,7 +868,6 @@ def simhash_neardup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: signatures via
     :func:`simhash_signatures`, pair join via the generic
@@ -1072,7 +875,7 @@ def simhash_neardup_pairs(
 
     Returns (id_a, id_b, hamming) with id_a < id_b, hamming <= max_hamming.
     """
-    sigs = simhash_signatures(df, text_col, id_col, impl=impl)
+    sigs = simhash_signatures(df, text_col, id_col)
     return hamming_neardup_pairs(
         sigs, "simhash", id_col=id_col, max_hamming=max_hamming)
 
@@ -1479,7 +1282,6 @@ def incremental_minhash_dedup(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.8,
-    impl: str = "arrow",
     strategy: str = "broadcast",
     max_bucket: int = 2048,
 ) -> DataFrame:
@@ -1519,16 +1321,14 @@ def incremental_minhash_dedup(
     idx_cols = {"minhash_sig", "shingles"}
     b_idx = (batch if idx_cols <= set(batch.columns)
              else minhash_index(batch, text_col, id_col, num_hashes,
-                                shingle_words, impl))
+                                shingle_words))
     # The batch index feeds FIVE plan branches (in-batch banding + its
     # two verify joins, the history probe keys, and the batch shingle
     # side): cut its lineage so the Arrow minhash pass runs once, not
-    # five times (r13; conditional — a persisted-index batch is a plain
-    # scan and stays uncut).
-    from whylogs_spark.core.util import checkpoint
-    # bounded=True: batch << history by contract, and the index
-    # (signatures + shingle hashes) is strictly smaller than the text
-    # it summarizes — the generic checkpoint size cap doesn't apply
+    # five times (conditional — a persisted-index batch is a plain
+    # scan and stays uncut). bounded=True: the index is linear in the
+    # batch (a fixed-width signature plus one hash per distinct gram)
+    # and never replicated, so the generic size cap doesn't apply.
     b_idx = checkpoint(b_idx, derived=True, bounded=True)
     if idx_cols <= set(history.columns):
         # persisted index: each consumer below reads the column it
@@ -1539,9 +1339,9 @@ def incremental_minhash_dedup(
         # Arrow passes (signature-only for the banding probe,
         # shingle-only for the verify join) beat one combined index
         # pass that would either run twice or be materialized at
-        # history scale (r13; same split minhash_lsh_pairs uses)
+        # history scale
         h_sig = minhash_signatures(history, text_col, id_col,
-                                   num_hashes, shingle_words, impl)
+                                   num_hashes, shingle_words)
         h_sh_src = shingle_hash_sets(history, text_col, id_col,
                                      shingle_words)
 
@@ -1604,7 +1404,6 @@ def cross_source_overlap(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate LEAKAGE matrix between corpus slices: how many
     verified J >= threshold pairs connect each (slice, slice) cell —
@@ -1613,15 +1412,13 @@ def cross_source_overlap(
     is a column.
 
     Returns (group_a, group_b, n_pairs) with group_a <= group_b
-    (diagonal = within-slice near-dup mass). Pairs ride the standard
-    :func:`minhash_index` -> :func:`lsh_pairs_from_index` machinery;
-    the slice lookup joins the (small) verified pair set back to the
-    (id, group) projection — broadcast-friendly.
+    (diagonal = within-slice near-dup mass). Pairs come from
+    :func:`minhash_lsh_pairs`; the slice lookup joins the (small)
+    verified pair set back to the (id, group) projection —
+    broadcast-friendly.
     """
-    idx = minhash_index(df, text_col, id_col, num_hashes,
-                        shingle_words, impl)
-    pairs = lsh_pairs_from_index(idx, id_col, num_hashes, bands,
-                                 jaccard_threshold)
+    pairs = minhash_lsh_pairs(df, text_col, id_col, num_hashes, bands,
+                              shingle_words, jaccard_threshold)
     side = df.select(F.col(id_col), F.col(group_col))
     m = (
         pairs.join(side.withColumnRenamed(id_col, "id_a")
@@ -1756,7 +1553,6 @@ def minhash_recall_estimate(
     sample_per_mille: int = 10,
     max_sample: int = 20_000,
     band_edges=(0.5, 0.6, 0.7, 0.8, 0.9, 1.0),
-    impl: str = "arrow",
 ) -> DataFrame:
     """Empirical recall of the LSH banding stage, by exact-Jaccard band
     — the tuning tool for ``minhash_dedup`` parameters.
@@ -1828,9 +1624,9 @@ def minhash_recall_estimate(
 
     detected = minhash_lsh_pairs(
         sample, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_words=shingle_words, jaccard_threshold=edges[0],
-        impl=impl).select("id_a", "id_b",
-                          F.lit(True).alias("__found"))
+        shingle_words=shingle_words,
+        jaccard_threshold=edges[0]).select(
+            "id_a", "id_b", F.lit(True).alias("__found"))
 
     band_idx = None
     for i in range(len(edges) - 1):

@@ -2,11 +2,10 @@
 
 Two tiers, mirroring how a 100 TB pipeline actually uses ANN:
 
-* ``cosine_topk`` — brute-force scan vs one (or few) query vectors. The
-  query is a literal array folded into the plan (effectively broadcast);
-  the scan is a single narrow pass with ``zip_with``/``aggregate`` higher-
-  order functions (JVM, codegen) and a top-k via ``ORDER BY ... LIMIT k``
-  which Spark executes as TakeOrderedAndProject — no full sort.
+* ``cosine_topk`` — brute-force scan vs one query vector: one narrow
+  Arrow pass (a numpy matrix-vector product and a top-k per partition),
+  then ``ORDER BY ... LIMIT k``, which Spark executes as
+  TakeOrderedAndProject — no full sort.
 * ``lsh_bucketed_topk`` — random-hyperplane LSH (Charikar 2002): sign
   signatures per vector, bucketed candidate retrieval, exact re-rank of
   candidates only. Hyperplanes are derived deterministically from
@@ -22,6 +21,7 @@ from typing import List, Optional, Sequence
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -57,75 +57,63 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 10,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Exact top-k by cosine vs a literal query vector.
+    """Exact top-k by cosine vs a literal query vector: highest cosine
+    first, ties by id. A row whose cosine is undefined (null or zero
+    vector, a null or non-finite element, a length other than the
+    query's, or a zero query) gets a NULL cosine, as in
+    :func:`cosine_similarity`, and ranks after every scored row.
 
-    impl="arrow" (default): one numpy matrix-vector product per Arrow
-    batch and a per-PARTITION top-k, so the final global sort sees at
-    most k × partitions candidate rows regardless of input size — ~4×
-    faster than the SQL path, whose higher-order array lambdas Spark
-    evaluates interpreted (outside whole-stage codegen).
-
-    impl="sql": pure-JVM fallback — Scan -> Project(dot/norm) ->
-    TakeOrderedAndProject(k). Correct at any scale, but ~dim interpreted
-    expression-tree evals per row.
+    One numpy matrix-vector product per Arrow batch and a per-PARTITION
+    top-k, so the final TakeOrderedAndProject sees at most
+    k x partitions candidate rows regardless of input size.
     """
-    if impl == "sql":
-        q = F.array(*[F.lit(float(x)) for x in query])
-        sim = cosine_similarity(F.col(vec_col), q).alias("cosine")
-        return (
-            df.select(F.col(id_col), sim)
-            .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-            .limit(k)
-        )
-
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
     qv = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum())) or 1.0
+    qn = float(np.sqrt((qv * qv).sum()))
+    dim = qv.size
     id_field = df.schema[id_col]
     out_schema = T.StructType(
         [id_field, T.StructField("cosine", T.DoubleType())])
 
+    def top(ids: list, sims: np.ndarray):
+        # scored rows by (-cosine, id), then the NULL rows by id
+        neg = np.where(np.isnan(sims), np.inf, -sims)
+        order = sorted(range(len(ids)), key=lambda i: (neg[i], ids[i]))[:k]
+        return [ids[i] for i in order], sims[order]
+
     def gen(batches):
         best_ids: list = []
-        best_sims: list = []
+        best_sims = np.empty(0)
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             arr = tbl.column(vec_col).combine_chunks()
-            try:
-                vals = np.asarray(arr.values, dtype=np.float64)
-                mat = vals.reshape(len(arr), qv.size)
-            except Exception:  # ragged / null rows: slow-path
-                mat = np.array(
-                    [r if r is not None else [0.0] * qv.size
-                     for r in arr.to_pylist()], dtype=np.float64)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            norms[norms == 0.0] = 1.0
-            sims = (mat @ qv) / (norms * qn)
-            ids = tbl.column(id_col).to_pylist()
-            best_ids.extend(ids)
-            best_sims.extend(sims.tolist())
+            ok = np.asarray(pc.fill_null(pc.equal(
+                pc.list_value_length(arr), dim), False))
+            sims = np.full(len(arr), np.nan)
+            if ok.any() and qn > 0.0:
+                mat = np.asarray(
+                    arr.filter(pa.array(ok)).flatten()
+                    .to_numpy(zero_copy_only=False),
+                    dtype=np.float64).reshape(-1, dim)
+                norms = np.sqrt((mat * mat).sum(axis=1))
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = (mat @ qv) / (norms * qn)
+                cos[~np.isfinite(cos)] = np.nan
+                sims[ok] = cos
+            best_ids.extend(tbl.column(id_col).to_pylist())
+            best_sims = np.concatenate([best_sims, sims])
             if len(best_ids) > 8 * k:
-                order = sorted(range(len(best_ids)),
-                               key=lambda i: (-best_sims[i], best_ids[i]))
-                order = order[:k]
-                best_ids = [best_ids[i] for i in order]
-                best_sims = [best_sims[i] for i in order]
+                best_ids, best_sims = top(best_ids, best_sims)
         if best_ids:
-            order = sorted(range(len(best_ids)),
-                           key=lambda i: (-best_sims[i], best_ids[i]))[:k]
+            best_ids, best_sims = top(best_ids, best_sims)
             yield pa.RecordBatch.from_arrays(
-                [pa.array([best_ids[i] for i in order]),
-                 pa.array([float(best_sims[i]) for i in order],
-                          pa.float64())],
+                [pa.array(best_ids),
+                 pa.array(best_sims, pa.float64(),
+                          mask=np.isnan(best_sims))],
                 names=[id_col, "cosine"])
 
     part = df.select(id_col, vec_col).mapInArrow(gen, out_schema)
-    return part.orderBy(F.col("cosine").desc(),
+    return part.orderBy(F.col("cosine").desc_nulls_last(),
                         F.col(id_col).asc()).limit(k)
 
 
